@@ -1,10 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import scala.jdk.CollectionConverters._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // builder-iteration aid: comma-separated exact names and/or prefixes
     // (trailing '*') restrict the run, e.g. SPARK_GRAFT_BENCH_ONLY='stream_*'
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
@@ -56,52 +55,15 @@ object Bench {
         finally st.close()
       } else 0L
     }
-    // builder-iteration aid (r16 verdict #1 isolation runs): force the
-    // fraction to separate the cache-evictability suspect from session
-    // history in the sf10 steady>cold attribution. Unset = dataset-sized.
-    val storageFraction = sys.env.getOrElse("SPARK_GRAFT_STORAGE_FRACTION",
-      if (corpusBytes >= (512L << 20)) "0.2" else "0.5")
+    val storageFraction = if (corpusBytes >= (512L << 20)) "0.2" else "0.5"
     System.err.println(
       s"[bench] corpus=$corpusBytes bytes -> spark.memory.storageFraction=$storageFraction")
-    // AQE size-first partition coalescing: EXAMINED AND REJECTED for this
-    // workload (optimization r17). The Spark tuning doc recommends
-    // `coalescePartitions.parallelismFirst=false` in production (size
-    // reduce stages by bytes against the 64 MB advisory target), and the
-    // ~110 ms × 32-task dispatch floor per reduce stage (Probe) made it
-    // look like a broad win — but a 3-pass A/B on the affected queries
-    // measured the opposite, calibration-adjusted: copurchase_pairs 2.44
-    // → 5.37 s, window_rank_per_group 1.13 → 2.20, single_source_risk
-    // 1.44 → 2.07, dedup_cosine_lsh 1.61 → 2.25. Mechanism: bytes-first
-    // coalescing assumes bytes ≈ work, but these reduce stages are
-    // CPU-DENSE at small bytes (collect_set basket expansion, window
-    // ranks, hamming verifies) and collapsing them to one task
-    // serializes real compute. At 100 TB the setting is moot for heavy
-    // stages (partitions exceed the advisory size) — so the Spark
-    // default stays, and the knob remains for re-measurement on hosts
-    // where dispatch dominates compute.
-    val parallelismFirst =
-      sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true")
-    // Same A/B discipline for the join-strategy preference (guide §3.1/§9:
-    // allowing shuffled-hash join skips both sort passes of a sort-merge
-    // when one side fits a per-partition hash table). Strategy choice
-    // cannot change join RESULTS — only the physical operator. r17 measured
-    // the two settings NEUTRAL on the ten most join-heavy queries (8.80 vs
-    // 8.89 s, within calibration noise — the mid-tier joins all broadcast),
-    // and the r17 verdict's read stands: a neutral A/B argues for the
-    // SPARK DEFAULT, not a baked-in non-default. Reverted to `true` in r18
-    // (re-confirmed neutral); the knob remains for join-heavy hosts where
-    // SHJ's skipped sorts actually pay.
-    val preferSmj =
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
+    // Join strategy and AQE coalescing stay at Spark's defaults
+    // (preferSortMergeJoin=true, coalescePartitions.parallelismFirst=true):
+    // the r17/r18 A/Bs of the alternatives measured neutral or slower. To
+    // re-measure, pass `-Dspark.sql...=...` through the JVM options.
+    val spark = GraftSession.builder()
       .config("spark.memory.storageFraction", storageFraction)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        parallelismFirst)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // HOST-CALIBRATION ANCHOR (r16 verdict #2): the same-code A/B that
@@ -132,49 +94,56 @@ object Bench {
     // way the reference separates ETL wall-time (etl_lakehouse.py:139-147)
     // from per-query latency measured on the already-built gold zone
     // (test_queries.py:132-144). Reported separately, not hidden.
-    val w0 = System.nanoTime()
-    try {
-      graft.pipeline.Medallion.factSales(spark, sfDir).count()
-      graft.pipeline.Medallion.dimPart(spark, sfDir).count()
-      // The silver index artifacts are ETL too: a 100 TB ingestion job
-      // stores the shingle table, the banded MinHash index, and the k-NN
-      // edge set once per corpus version (SilverArtifact) and every later
-      // session reads them. Forcing their publish here — count() drives
-      // the build on a miss, and is a cheap parquet read on a hit — makes
-      // the cold pass below measure what a cold SESSION pays (the stored-
-      // artifact read), not the once-per-corpus build, exactly as the gold
-      // zone is warmed above. Stderr shows "silver artifact hit/miss" per
-      // store, so the log records whether /tmp survived into this run.
-      graft.ops.Dedup.bandedTable(spark, sfDir).count()
-      graft.ops.Similarity.knnGraph(spark, sfDir, 3).count()
-      graft.ops.Dedup.clusters(spark, sfDir).count()
-      graft.ops.Dedup.semanticDedup(spark, sfDir).count()
-      graft.ops.TextOps.sparseWeights(spark, sfDir).count()
-      // r18: the market-basket table joined the stored-artifact set
-      // (BehaviorOps.baskets — r17 verdict #4); stage it with the others
-      graft.queries.BehaviorOps.baskets(spark, sfDir).count()
-      // staged demo tables (publish + committed deletes/merges/OPTIMIZE):
-      // skipped entirely when the stamped source fingerprint matches
-      graft.ops.DeletionVectors.dvOrders(spark, sfDir)
-      graft.ops.DeletionVectors.dvPrunedOrders(spark, sfDir)
-      graft.ops.MergeOnRead.morOrders(spark, sfDir)
-      graft.ops.MergeOnRead.fullOrders(spark, sfDir)
-      graft.ops.MergeOnRead.evoOrders(spark, sfDir)
-      graft.ops.InvertedIndex.indexTable(spark, sfDir).count()
-      graft.ops.DataSkipping.zorderedLineitem(spark, sfDir)
-      graft.ops.DataSkipping.dateClusteredOrders(spark, sfDir)
-      // bucketed tables live in the session CATALOG (bucket spec needs
-      // saveAsTable); staging them here keeps the catalog entry across
-      // SessionCaches.clear, so the cold pass measures the bucket-aware
-      // join, not the one-time bucketed write
-      graft.queries.ScaleOps.bucketedJoin(spark, sfDir).count()
-      // one-per-JVM stateful-streaming init (RocksDB JNI + state-store
-      // classes) is warmup, not query cost — the cold pass should measure
-      // a cold SESSION, not a cold JVM (r12 "wrong #2")
-      graft.streaming.EventsStream.prewarm(spark, sfDir)
-    } catch { case _: Throwable => () }
-    val warmup = (System.nanoTime() - w0) / 1e9
+    // Each staging step runs on its own: a failure is reported on stderr
+    // and in the JSON 'failed' list as warmup/<step>, and the later steps
+    // and the passes still run.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def stage(step: String)(body: => Any): Unit =
+      try body catch { case NonFatal(e) =>
+        failed += s"warmup/$step"
+        System.err.println(s"[bench] warmup/$step FAILED: ${e.getMessage}")
+        e.printStackTrace()
+      }
+    val w0 = System.nanoTime()
+    stage("fact_sales") { graft.pipeline.Medallion.factSales(spark, sfDir).count() }
+    stage("dim_part") { graft.pipeline.Medallion.dimPart(spark, sfDir).count() }
+    // The silver index artifacts are ETL too: a 100 TB ingestion job
+    // stores the shingle table, the banded MinHash index, and the k-NN
+    // edge set once per corpus version (SilverArtifact) and every later
+    // session reads them. Forcing their publish here — count() drives
+    // the build on a miss, and is a cheap parquet read on a hit — makes
+    // the cold pass below measure what a cold SESSION pays (the stored-
+    // artifact read), not the once-per-corpus build, exactly as the gold
+    // zone is warmed above. Stderr shows "silver artifact hit/miss" per
+    // store, so the log records whether /tmp survived into this run.
+    stage("banded_table") { graft.ops.Dedup.bandedTable(spark, sfDir).count() }
+    stage("knn_graph") { graft.ops.Similarity.knnGraph(spark, sfDir, 3).count() }
+    stage("dedup_clusters") { graft.ops.Dedup.clusters(spark, sfDir).count() }
+    stage("semantic_dedup") { graft.ops.Dedup.semanticDedup(spark, sfDir).count() }
+    stage("sparse_weights") { graft.ops.TextOps.sparseWeights(spark, sfDir).count() }
+    // r18: the market-basket table joined the stored-artifact set
+    // (BehaviorOps.baskets — r17 verdict #4); stage it with the others
+    stage("baskets") { graft.queries.BehaviorOps.baskets(spark, sfDir).count() }
+    // staged demo tables (publish + committed deletes/merges/OPTIMIZE):
+    // skipped entirely when the stamped source fingerprint matches
+    stage("dv_orders") { graft.ops.DeletionVectors.dvOrders(spark, sfDir) }
+    stage("dv_pruned_orders") { graft.ops.DeletionVectors.dvPrunedOrders(spark, sfDir) }
+    stage("mor_orders") { graft.ops.MergeOnRead.morOrders(spark, sfDir) }
+    stage("full_orders") { graft.ops.MergeOnRead.fullOrders(spark, sfDir) }
+    stage("evo_orders") { graft.ops.MergeOnRead.evoOrders(spark, sfDir) }
+    stage("index_table") { graft.ops.InvertedIndex.indexTable(spark, sfDir).count() }
+    stage("zordered_lineitem") { graft.ops.DataSkipping.zorderedLineitem(spark, sfDir) }
+    stage("date_clustered_orders") { graft.ops.DataSkipping.dateClusteredOrders(spark, sfDir) }
+    // bucketed tables live in the session CATALOG (bucket spec needs
+    // saveAsTable); staging them here keeps the catalog entry across
+    // SessionCaches.clear, so the cold pass measures the bucket-aware
+    // join, not the one-time bucketed write
+    stage("bucketed_join") { graft.queries.ScaleOps.bucketedJoin(spark, sfDir).count() }
+    // one-per-JVM stateful-streaming init (RocksDB JNI + state-store
+    // classes) is warmup, not query cost — the cold pass should measure
+    // a cold SESSION, not a cold JVM (r12 "wrong #2")
+    stage("stream_prewarm") { graft.streaming.EventsStream.prewarm(spark, sfDir) }
+    val warmup = (System.nanoTime() - w0) / 1e9
     // a failed pass records NaN — the query is then EXCLUDED from the
     // median/total (a time-until-exception would masquerade as fast and
     // understate regressions); it survives only in the 'failed' list
@@ -266,7 +235,7 @@ object Bench {
       val out = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")).toAbsolutePath
       java.nio.file.Files.writeString(out, json + "\n")
-    } catch { case scala.util.control.NonFatal(e) =>
+    } catch { case NonFatal(e) =>
       // IOException AND e.g. InvalidPathException from a malformed env
       // override — nothing here may fail the bench after results printed
       System.err.println(s"[bench] could not persist bench_out.json: ${e.getMessage}")

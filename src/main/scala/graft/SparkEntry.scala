@@ -1,45 +1,51 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
+
+/** One declared query: its name, the builder of its DataFrame over a
+  * dataset directory, and equivalent ANSI SQL that DuckDB runs over the
+  * same parquet tables to check its rows. */
+final case class QuerySpec(name: String,
+  build: (SparkSession, String) => DataFrame, oracle: String)
+
+object QuerySpec {
+  /** Index specs by name. A name declared twice fails here instead of one
+    * spec silently overwriting the other. */
+  def byName(specs: Seq[QuerySpec]): Map[String, QuerySpec] = {
+    val dups = specs.groupBy(_.name).collect { case (n, ss) if ss.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    specs.map(s => s.name -> s).toMap
+  }
+}
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Analytics.q1SalesPerMonth(spark, "/root/testdata/sf0.001")
+
+  /** Every query family, listed once. */
+  lazy val specs: Map[String, QuerySpec] = QuerySpec.byName(Seq(
+    graft.queries.Analytics.specs, graft.queries.RelOps.specs,
+    graft.ops.Dedup.specs, graft.ops.Similarity.specs,
+    graft.ops.TextOps.specs, graft.ops.Multimodal.specs,
+    graft.streaming.EventsStream.specs, graft.queries.PipelineOps.specs,
+    graft.queries.ScaleOps.specs, graft.ops.AsOf.specs,
+    graft.queries.TemporalOps.specs, graft.queries.ProfileOps.specs,
+    graft.queries.ChangeOps.specs, graft.ops.TopK.specs,
+    graft.queries.ExtraOps.specs, graft.ops.CorpusOps.specs,
+    graft.ops.GraphOps.specs, graft.queries.BehaviorOps.specs,
+    graft.ops.TokenOps.specs, graft.queries.StatOps.specs,
+    graft.ops.SubstringDedup.specs, graft.ops.Boilerplate.specs,
+    graft.ops.DataSkipping.specs, graft.sources.SkippingFileIndex.specs,
+    graft.ops.DeletionVectors.specs, graft.ops.MergeOnRead.specs,
+    graft.ops.Classifier.specs, graft.ops.InvertedIndex.specs,
+    graft.ops.TableStats.specs, graft.sources.GraftSink.specs
+  ).flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Analytics.queries ++ graft.queries.RelOps.queries ++
-      graft.ops.Dedup.queries ++ graft.ops.Similarity.queries ++
-      graft.ops.TextOps.queries ++ graft.ops.Multimodal.queries ++
-      graft.streaming.EventsStream.queries ++ graft.queries.PipelineOps.queries ++
-      graft.queries.ScaleOps.queries ++ graft.ops.AsOf.queries ++
-      graft.queries.TemporalOps.queries ++ graft.queries.ProfileOps.queries ++
-      graft.queries.ChangeOps.queries ++ graft.ops.TopK.queries ++
-      graft.queries.ExtraOps.queries ++ graft.ops.CorpusOps.queries ++
-      graft.ops.GraphOps.queries ++ graft.queries.BehaviorOps.queries ++
-      graft.ops.TokenOps.queries ++ graft.queries.StatOps.queries ++
-      graft.ops.SubstringDedup.queries ++ graft.ops.Boilerplate.queries ++
-      graft.ops.DataSkipping.queries ++ graft.sources.SkippingFileIndex.queries ++
-      graft.ops.DeletionVectors.queries ++ graft.ops.MergeOnRead.queries ++
-      graft.ops.Classifier.queries ++ graft.ops.InvertedIndex.queries ++
-      graft.ops.TableStats.queries ++
-      graft.sources.GraftSink.queries
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Analytics.oracleSql ++ graft.queries.RelOps.oracleSql ++
-      graft.ops.Dedup.oracleSql ++ graft.ops.Similarity.oracleSql ++
-      graft.ops.TextOps.oracleSql ++ graft.ops.Multimodal.oracleSql ++
-      graft.streaming.EventsStream.oracleSql ++ graft.queries.PipelineOps.oracleSql ++
-      graft.queries.ScaleOps.oracleSql ++ graft.ops.AsOf.oracleSql ++
-      graft.queries.TemporalOps.oracleSql ++ graft.queries.ProfileOps.oracleSql ++
-      graft.queries.ChangeOps.oracleSql ++ graft.ops.TopK.oracleSql ++
-      graft.queries.ExtraOps.oracleSql ++ graft.ops.CorpusOps.oracleSql ++
-      graft.ops.GraphOps.oracleSql ++ graft.queries.BehaviorOps.oracleSql ++
-      graft.ops.TokenOps.oracleSql ++ graft.queries.StatOps.oracleSql ++
-      graft.ops.SubstringDedup.oracleSql ++ graft.ops.Boilerplate.oracleSql ++
-      graft.ops.DataSkipping.oracleSql ++ graft.sources.SkippingFileIndex.oracleSql ++
-      graft.ops.DeletionVectors.oracleSql ++ graft.ops.MergeOnRead.oracleSql ++
-      graft.ops.Classifier.oracleSql ++ graft.ops.InvertedIndex.oracleSql ++
-      graft.ops.TableStats.oracleSql ++
-      graft.sources.GraftSink.oracleSql
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map { case (n, s) => n -> s.build }
+
+  /** For each key in queries, the DuckDB oracle SQL. */
+  lazy val oracleSql: Map[String, String] = specs.map { case (n, s) => n -> s.oracle }
 }

@@ -1,16 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Regenerates the PLANS.md physical-plan audit:
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, GenerateExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+
+import graft.util.PlanNodes
+
+/** Query-iteration tool over the registered queries, on one
+  * [[GraftSession]]:
   * {{{
-  *   sbt "runMain graft.PlanDump /root/testdata/sf0.01" > PLANS.md
+  *   sbt "runMain graft.Tool time <query> <sfDir>"
+  *   sbt "runMain graft.Tool explain <sfDir> <outDir> <suffix> <q1,q2|all>"
+  *   sbt "runMain graft.Tool reuse <sfDir> <q1,q2,...>"
+  *   sbt "runMain graft.Tool plans <sfDir>" > PLANS.md
   * }}}
-  * Prints the executedPlan for the headline queries whose plan SHAPE is a
-  * design claim (pushdown, broadcast, partial agg, no-Exchange bucketing,
-  * decorrelation, block-pair shuffle), so the audit can be refreshed after
-  * any operator change instead of drifting. */
-object PlanDump {
+  *  - `time` warms the query once, then times 3 passes and their min. Each
+  *    pass builds the DataFrame and writes it to the `noop` sink, which
+  *    runs the full plan (a `count()` lets Catalyst prune sorts, windows,
+  *    joins and codec calls).
+  *  - `explain` writes `.explain("formatted")` of each query to
+  *    `<outDir>/<query>_<suffix>.txt`: the evidence trail of an
+  *    optimization (`before` / `after`).
+  *  - `reuse` runs each query and prints the live shuffle-exchange,
+  *    reused-exchange, generate and scan counts of its FINAL adaptive plan,
+  *    which static `.explain` cannot show (reuse is a runtime stage-cache
+  *    effect). Distinct by id: a subtree materialized once counts once.
+  *  - `plans` prints the PLANS.md audit: the executedPlan of each headline
+  *    query whose plan SHAPE is a design claim, so the audit can be
+  *    refreshed after any operator change instead of drifting.
+  */
+object Tool {
 
   /** (query, one-line claim being audited). */
   val audited: Seq[(String, String)] = Seq(
@@ -106,16 +127,82 @@ object PlanDump {
     "dv_file_prune" -> "DV x skipping composition: fully-deleted files leave the FileScan path list (metadata-only DV-vs-sidecar join decides), partial files keep the broadcast positional anti-join"
   )
 
+  private val usage = """usage: graft.Tool time <query> <sfDir>
+    |       graft.Tool explain <sfDir> <outDir> <suffix> <q1,q2|all>
+    |       graft.Tool reuse <sfDir> <q1,q2,...>
+    |       graft.Tool plans <sfDir>""".stripMargin
+
+  /** The one name lookup: an unknown name fails with the known ones. */
+  def lookup(name: String): QuerySpec =
+    SparkEntry.specs.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown query '$name'; known: ${SparkEntry.specs.keys.toSeq.sorted.mkString(", ")}"))
+
+  private def lookupAll(list: String): Seq[QuerySpec] =
+    (if (list == "all") SparkEntry.specs.keys.toSeq.sorted else list.split(",").toSeq).map(lookup)
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    println("# PLANS - physical-plan audit (generated by graft.PlanDump at sf0.01)")
+    // resolve every name before the session starts: a typo fails fast
+    val command: SparkSession => Unit = try args.toSeq match {
+      case Seq("time", name, sfDir) =>
+        val q = lookup(name)
+        time(_, q, sfDir)
+      case Seq("explain", sfDir, outDir, suffix, list) =>
+        val qs = lookupAll(list)
+        explain(_, qs, sfDir, outDir, suffix)
+      case Seq("reuse", sfDir, list) =>
+        val qs = lookupAll(list)
+        reuse(_, qs, sfDir)
+      case Seq("plans", sfDir) =>
+        val qs = audited.map { case (n, claim) => lookup(n) -> claim }
+        plans(_, qs, sfDir)
+      case _ => throw new IllegalArgumentException(usage)
+    } catch { case e: IllegalArgumentException =>
+      System.err.println(s"[tool] ${e.getMessage}")
+      sys.exit(2)
+    }
+    val spark = GraftSession.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try command(spark) finally spark.stop()
+  }
+
+  private def time(spark: SparkSession, q: QuerySpec, sfDir: String): Unit = {
+    def pass(): Double = {
+      val t0 = System.nanoTime()
+      q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    pass() // warm: plan, caches, JIT
+    val times = (1 to 3).map { i =>
+      val t = pass()
+      println(f"[time] ${q.name} pass $i: $t%.3f s")
+      t
+    }
+    println(f"[time] ${q.name} min: ${times.min}%.3f s")
+  }
+
+  private def explain(spark: SparkSession, qs: Seq[QuerySpec],
+      sfDir: String, outDir: String, suffix: String): Unit = {
+    val dir = Files.createDirectories(Paths.get(outDir))
+    qs.foreach { q =>
+      val txt = q.build(spark, sfDir).queryExecution.explainString(FormattedMode)
+      Files.writeString(dir.resolve(s"${q.name}_$suffix.txt"), txt)
+      System.err.println(s"[explain] ${q.name} -> ${q.name}_$suffix.txt (${txt.length} chars)")
+    }
+  }
+
+  private def reuse(spark: SparkSession, qs: Seq[QuerySpec], sfDir: String): Unit =
+    qs.foreach { q =>
+      val nodes = PlanNodes.executedNodes(q.build(spark, sfDir))
+      val live = nodes.collect { case e: ShuffleExchangeExec => e.id }.distinct.size
+      val reused = nodes.count(_.isInstanceOf[ReusedExchangeExec])
+      val gens = nodes.collect { case g: GenerateExec => g.id }.distinct.size
+      val scans = nodes.collect { case s: FileSourceScanExec => s.id }.distinct.size
+      println(s"[reuse] ${q.name}: liveShuffles=$live reusedExchanges=$reused " +
+        s"liveGenerates=$gens liveScans=$scans")
+    }
+
+  private def plans(spark: SparkSession, qs: Seq[(QuerySpec, String)], sfDir: String): Unit = {
+    println(s"# PLANS - physical-plan audit (generated by graft.Tool plans at ${Paths.get(sfDir).getFileName})")
     println()
     println("""Evidence that the headline plans are the plans we want: filters and
 projections reach the parquet scan, dims broadcast, aggregates are
@@ -124,11 +211,11 @@ bucketed join has no Exchange, ranking shares one exchange with its
 aggregation, the correlated scalar subquery is decorrelated, the cosine
 block product shuffles once on the block key, and the salted distinct
 aggregates partially per salt. Regenerate with:
-`sbt "runMain graft.PlanDump <sfDir>" > PLANS.md`""")
-    audited.foreach { case (name, claim) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+`sbt "runMain graft.Tool plans <sfDir>" > PLANS.md`""")
+    qs.foreach { case (q, claim) =>
+      val df = q.build(spark, sfDir)
       println()
-      println(s"## $name - $claim")
+      println(s"## ${q.name} - $claim")
       println()
       println("```")
       // executedPlan, truncated per line to keep the audit reviewable
@@ -137,6 +224,5 @@ aggregates partially per salt. Regenerate with:
         .mkString("\n").trim)
       println("```")
     }
-    spark.stop()
   }
 }

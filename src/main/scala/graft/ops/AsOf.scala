@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -211,15 +212,10 @@ SELECT purchase_id, user_id, purchase_ts,
        CASE WHEN gap_us <= $toleranceUs THEN gap_us END AS gap_us
 FROM base ORDER BY purchase_id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "asof_join_events"    -> (asofEvents _),
-    "asof_join_tolerance" -> ((s: SparkSession, d: String) => asofEventsTolerance(s, d)),
-    "asof_join_forward"   -> (asofEventsForward _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "asof_join_events"    -> asofEventsOracle,
-    "asof_join_tolerance" -> asofToleranceOracle(),
-    "asof_join_forward"   -> asofEventsForwardOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("asof_join_events", asofEvents, asofEventsOracle),
+    QuerySpec("asof_join_tolerance", (s, d) => asofEventsTolerance(s, d),
+      asofToleranceOracle()),
+    QuerySpec("asof_join_forward", asofEventsForward, asofEventsForwardOracle)
   )
 }

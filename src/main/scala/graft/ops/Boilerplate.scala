@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -81,11 +82,7 @@ SELECT sgh.doc_id, any_value(sgh.source) AS source,
 FROM sgh LEFT JOIN b ON sgh.source = b.source AND sgh.h = b.h
 GROUP BY sgh.doc_id ORDER BY sgh.doc_id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "boilerplate_strip" -> ((s: SparkSession, d: String) => boilerplateStrip(s, d))
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "boilerplate_strip" -> boilerplateStripOracle()
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("boilerplate_strip", (s, d) => boilerplateStrip(s, d), boilerplateStripOracle())
   )
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -216,13 +217,8 @@ SELECT CAST(y AS BIGINT) AS y, CAST(pred AS BIGINT) AS pred,
 FROM scored GROUP BY 1, 2 ORDER BY y, pred"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "perceptron_train" -> (perceptronTrain _),
-    "perceptron_score" -> (perceptronScore _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "perceptron_train" -> perceptronTrainOracle,
-    "perceptron_score" -> perceptronScoreOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("perceptron_train", perceptronTrain, perceptronTrainOracle),
+    QuerySpec("perceptron_score", perceptronScore, perceptronScoreOracle)
   )
 }

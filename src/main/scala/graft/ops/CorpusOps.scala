@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -826,7 +827,7 @@ FROM k GROUP BY 1 ORDER BY 1"""
     // Fewer than 100 docs ⇒ the threshold is the order-maximum row ⇒ all
     // kept, as rank <= 100 marked them. The scored subtree feeds both the
     // threshold and the output, so its exchange is built once and reused
-    // (no grouping-key filter to split it — ProbeReuse-verified).
+    // (no grouping-key filter to split it — verified with `graft.Tool reuse`).
     graft.functions.GraftFunctions.register(s)
     val thr = scored
       .agg(call_function("topk_min",
@@ -1080,49 +1081,27 @@ SELECT n_docs, n_tokens, vocab, n_sources, n_langs,
        CAST(n_tokens // n_docs AS BIGINT) AS mean_doc_tokens
 FROM base CROSS JOIN t CROSS JOIN dup"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "source_tv_distance"   -> (sourceTvDistance _),
-    "source_overlap"       -> (sourceOverlap _),
-    "dataset_card"         -> (datasetCard _),
-    "inbatch_negatives"    -> ((s: SparkSession, d: String) => inbatchNegatives(s, d)),
-    "dsir_importance_sample" -> (dsirSample _),
-    "epoch_shuffle"        -> ((s: SparkSession, d: String) => epochShuffle(s, d)),
-    "weighted_sample"      -> ((s: SparkSession, d: String) => weightedSample(s, d)),
-    "priority_subset_sum"  -> ((s: SparkSession, d: String) => prioritySubsetSum(s, d)),
-    "span_prune_firstwins" -> (spanPruneFirstWins _),
-    "dataset_split"        -> (datasetSplit _),
-    "quality_adaptive_filter" -> (qualityAdaptiveFilter _),
-    "quality_calibration"  -> (qualityCalibration _),
-    "weighted_median"      -> (weightedMedian _),
-    "mix_temperature"      -> (mixTemperature _),
-    "text_repetition"      -> (repetition _),
-    "contamination_ngrams" -> (contamination _),
-    "mix_sample"           -> (mixSample _),
-    "sequence_pack"        -> ((s: SparkSession, d: String) => sequencePack(s, d)),
-    "dedup_keep_best"      -> (keepBest _),
-    "vocab_coverage"       -> ((s: SparkSession, d: String) => vocabCoverage(s, d))
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "source_tv_distance"   -> sourceTvDistanceOracle,
-    "source_overlap"       -> sourceOverlapOracle,
-    "dataset_card"         -> datasetCardOracle,
-    "inbatch_negatives"    -> inbatchNegativesOracle,
-    "dsir_importance_sample" -> dsirSampleOracle,
-    "epoch_shuffle"        -> epochShuffleOracle,
-    "weighted_sample"      -> weightedSampleOracle,
-    "priority_subset_sum"  -> prioritySubsetSumOracle,
-    "span_prune_firstwins" -> spanPruneFirstWinsOracle,
-    "dataset_split"        -> datasetSplitOracle,
-    "quality_adaptive_filter" -> qualityAdaptiveFilterOracle,
-    "quality_calibration"  -> qualityCalibrationOracle,
-    "weighted_median"      -> weightedMedianOracle,
-    "mix_temperature"      -> mixTemperatureOracle,
-    "text_repetition"      -> repetitionOracle,
-    "contamination_ngrams" -> contaminationOracle,
-    "mix_sample"           -> mixSampleOracle,
-    "sequence_pack"        -> sequencePackOracle,
-    "dedup_keep_best"      -> keepBestOracle,
-    "vocab_coverage"       -> vocabCoverageOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("source_tv_distance", sourceTvDistance, sourceTvDistanceOracle),
+    QuerySpec("source_overlap", sourceOverlap, sourceOverlapOracle),
+    QuerySpec("dataset_card", datasetCard, datasetCardOracle),
+    QuerySpec("inbatch_negatives", (s, d) => inbatchNegatives(s, d), inbatchNegativesOracle),
+    QuerySpec("dsir_importance_sample", dsirSample, dsirSampleOracle),
+    QuerySpec("epoch_shuffle", (s, d) => epochShuffle(s, d), epochShuffleOracle),
+    QuerySpec("weighted_sample", (s, d) => weightedSample(s, d), weightedSampleOracle),
+    QuerySpec("priority_subset_sum", (s, d) => prioritySubsetSum(s, d),
+      prioritySubsetSumOracle),
+    QuerySpec("span_prune_firstwins", spanPruneFirstWins, spanPruneFirstWinsOracle),
+    QuerySpec("dataset_split", datasetSplit, datasetSplitOracle),
+    QuerySpec("quality_adaptive_filter", qualityAdaptiveFilter, qualityAdaptiveFilterOracle),
+    QuerySpec("quality_calibration", qualityCalibration, qualityCalibrationOracle),
+    QuerySpec("weighted_median", weightedMedian, weightedMedianOracle),
+    QuerySpec("mix_temperature", mixTemperature, mixTemperatureOracle),
+    QuerySpec("text_repetition", repetition, repetitionOracle),
+    QuerySpec("contamination_ngrams", contamination, contaminationOracle),
+    QuerySpec("mix_sample", mixSample, mixSampleOracle),
+    QuerySpec("sequence_pack", (s, d) => sequencePack(s, d), sequencePackOracle),
+    QuerySpec("dedup_keep_best", keepBest, keepBestOracle),
+    QuerySpec("vocab_coverage", (s, d) => vocabCoverage(s, d), vocabCoverageOracle)
   )
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
@@ -329,16 +330,18 @@ object DataSkipping {
       .orderBy("o_orderkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "zorder_skipping" -> (zorderSkipping _),
-    "data_skipping_read" -> (dataSkippingRead _),
-    "bloom_file_skipping" -> (bloomFileSkipping _)
-  )
+  val dataSkippingReadOracle: String = """
+      SELECT o_orderstatus, count(*) AS n_orders,
+             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
+      FROM orders
+      WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+        AND o_orderdate < TIMESTAMP '1997-04-01'
+      GROUP BY 1 ORDER BY 1"""
 
-  val oracleSql: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // integer-only bound arithmetic ('//' floor-div in DuckDB ≡ Long '/'
     // in Scala on non-negative ints) — no decimal/double rounding hazard
-    "zorder_skipping" -> """
+    QuerySpec("zorder_skipping", zorderSkipping, """
       WITH b AS (
         SELECT min(l_partkey) plo, max(l_partkey) phi,
                min(l_suppkey) slo, max(l_suppkey) shi
@@ -348,19 +351,13 @@ object DataSkipping {
       FROM lineitem, b
       WHERE l_partkey BETWEEN plo + (phi-plo)*2//5 AND plo + (phi-plo)*3//5
         AND l_suppkey BETWEEN slo + (shi-slo)*2//5 AND slo + (shi-slo)*3//5
-      GROUP BY 1 ORDER BY 1""",
-    "data_skipping_read" -> """
-      SELECT o_orderstatus, count(*) AS n_orders,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
-      FROM orders
-      WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        AND o_orderdate < TIMESTAMP '1997-04-01'
-      GROUP BY 1 ORDER BY 1""",
-    "bloom_file_skipping" -> """
+      GROUP BY 1 ORDER BY 1"""),
+    QuerySpec("data_skipping_read", dataSkippingRead, dataSkippingReadOracle),
+    QuerySpec("bloom_file_skipping", bloomFileSkipping, """
       SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
       FROM orders
       WHERE o_orderkey IN (
         SELECT o_orderkey FROM orders ORDER BY o_orderkey LIMIT 12)
-      ORDER BY o_orderkey"""
+      ORDER BY o_orderkey""")
   )
 }

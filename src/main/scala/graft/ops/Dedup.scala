@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1147,29 +1148,18 @@ FROM ranked WHERE rn = 1 ORDER BY cluster_root"""
 
   // ---- registration ----
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact"         -> (exact _),
-    "dedup_ngram_jaccard" -> ((s: SparkSession, d: String) => ngramJaccard(s, d)),
-    "dedup_minhash_lsh"   -> ((s: SparkSession, d: String) => minhashLsh(s, d)),
-    "dedup_incremental_minhash" -> ((s: SparkSession, d: String) => minhashIncremental(s, d)),
-    "dedup_simhash"       -> (simhash _),
-    "dedup_simhash_pairs" -> ((s: SparkSession, d: String) => simhashPairs(s, d)),
-    "dedup_cosine"        -> ((s: SparkSession, d: String) => cosinePairs(s, d)),
-    "dedup_cosine_lsh"    -> ((s: SparkSession, d: String) => cosinePairsLsh(s, d, threshold = 0.4)),
-    "dedup_clusters"      -> ((s: SparkSession, d: String) => clusters(s, d)),
-    "dedup_semantic"      -> ((s: SparkSession, d: String) => semanticDedup(s, d))
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "dedup_exact"         -> exactOracle,
-    "dedup_ngram_jaccard" -> ngramJaccardOracle(),
-    "dedup_minhash_lsh"   -> ngramJaccardOracle(0.9),
-    "dedup_incremental_minhash" -> minhashIncrementalOracle(),
-    "dedup_simhash"       -> simhashOracle,
-    "dedup_simhash_pairs" -> simhashPairsOracle(),
-    "dedup_cosine"        -> cosinePairsOracle(),
-    "dedup_cosine_lsh"    -> cosinePairsLshOracle(threshold = 0.4),
-    "dedup_clusters"      -> clustersOracle(),
-    "dedup_semantic"      -> semanticDedupOracle()
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_exact", exact, exactOracle),
+    QuerySpec("dedup_ngram_jaccard", (s, d) => ngramJaccard(s, d), ngramJaccardOracle()),
+    QuerySpec("dedup_minhash_lsh", (s, d) => minhashLsh(s, d), ngramJaccardOracle(0.9)),
+    QuerySpec("dedup_incremental_minhash", (s, d) => minhashIncremental(s, d),
+      minhashIncrementalOracle()),
+    QuerySpec("dedup_simhash", simhash, simhashOracle),
+    QuerySpec("dedup_simhash_pairs", (s, d) => simhashPairs(s, d), simhashPairsOracle()),
+    QuerySpec("dedup_cosine", (s, d) => cosinePairs(s, d), cosinePairsOracle()),
+    QuerySpec("dedup_cosine_lsh", (s, d) => cosinePairsLsh(s, d, threshold = 0.4),
+      cosinePairsLshOracle(threshold = 0.4)),
+    QuerySpec("dedup_clusters", (s, d) => clusters(s, d), clustersOracle()),
+    QuerySpec("dedup_semantic", (s, d) => semanticDedup(s, d), semanticDedupOracle())
   )
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -324,23 +325,18 @@ object DeletionVectors {
       .orderBy("o_orderstatus")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "deletion_vector_read" -> (deletionVectorRead _),
-    "dv_file_prune" -> (dvFilePrune _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "deletion_vector_read" -> """
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("deletion_vector_read", deletionVectorRead, """
 SELECT o_orderstatus, count(*) AS n_orders,
        CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
 FROM orders
 WHERE NOT (o_orderpriority = '1-URGENT' AND o_orderkey % 10 < 3)
-GROUP BY 1 ORDER BY 1""",
-    "dv_file_prune" -> """
+GROUP BY 1 ORDER BY 1"""),
+    QuerySpec("dv_file_prune", dvFilePrune, """
 SELECT o_orderstatus, count(*) AS n_orders,
        CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
 FROM orders
 WHERE NOT (o_orderdate < TIMESTAMP '1996-07-01')
-GROUP BY 1 ORDER BY 1"""
+GROUP BY 1 ORDER BY 1""")
   )
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -304,17 +305,10 @@ JOIN deg dy ON dy.u = y
 ORDER BY jaccard_ppm DESC, cn DESC, x, y LIMIT 50"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "link_prediction" -> (linkPrediction _),
-    "graph_pagerank"  -> (pagerank _),
-    "graph_triangles" -> (triangles _),
-    "graph_bfs_distances" -> (bfsDistances _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "link_prediction" -> linkPredictionOracle,
-    "graph_pagerank"  -> pagerankOracle,
-    "graph_triangles" -> trianglesOracle,
-    "graph_bfs_distances" -> bfsDistancesOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("link_prediction", linkPrediction, linkPredictionOracle),
+    QuerySpec("graph_pagerank", pagerank, pagerankOracle),
+    QuerySpec("graph_triangles", triangles, trianglesOracle),
+    QuerySpec("graph_bfs_distances", bfsDistances, bfsDistancesOracle)
   )
 }

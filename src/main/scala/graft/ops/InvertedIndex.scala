@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -153,27 +154,21 @@ t AS (
          CAST(unnest(generate_series(1, len(ws))) AS BIGINT) AS pos
   FROM w)"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "phrase_search" -> (phraseSearch _),
-    "proximity_search" -> (proximitySearch _),
-    "index_incremental_phrase" -> (phraseIncremental _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "phrase_search" -> s"""$TokensCte
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("phrase_search", phraseSearch, s"""$TokensCte
 SELECT t1.doc_id, count(*) AS n_hits
 FROM t t1
 JOIN t t2 ON t2.doc_id = t1.doc_id AND t2.pos = t1.pos + 1
 JOIN t t3 ON t3.doc_id = t1.doc_id AND t3.pos = t1.pos + 2
 WHERE t1.term = 'slow' AND t2.term = 'hash' AND t3.term = 'batch'
-GROUP BY 1 ORDER BY 1""",
-    "proximity_search" -> s"""$TokensCte
+GROUP BY 1 ORDER BY 1"""),
+    QuerySpec("proximity_search", proximitySearch, s"""$TokensCte
 SELECT a.doc_id, count(*) AS n_pairs, min(a.pos) AS first_pos
 FROM t a JOIN t b ON b.doc_id = a.doc_id
      AND b.pos > a.pos AND b.pos <= a.pos + $Window
 WHERE a.term = '$TermA' AND b.term = '$TermB'
-GROUP BY 1 ORDER BY 1""",
-    "index_incremental_phrase" -> s"""$TokensCte,
+GROUP BY 1 ORDER BY 1"""),
+    QuerySpec("index_incremental_phrase", phraseIncremental, s"""$TokensCte,
 thr AS (SELECT 9 * max(doc_id) // 10 AS t FROM documents)
 SELECT doc_id, n_hits,
        CASE WHEN doc_id < (SELECT t FROM thr) THEN 'index' ELSE 'batch' END AS src
@@ -182,6 +177,6 @@ FROM (
   FROM t t1 JOIN t t2 ON t2.doc_id = t1.doc_id AND t2.pos = t1.pos + 1
   WHERE t1.term = 'big' AND t2.term = 'data'
   GROUP BY 1)
-ORDER BY doc_id"""
+ORDER BY doc_id""")
   )
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -770,49 +771,26 @@ object MergeOnRead {
       .orderBy("o_orderstatus")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "merge_upsert_mor" -> (mergeUpsertMor _),
-    "merge_full"       -> (mergeFullMatrix _),
-    "merge_schema_evolution" -> (mergeSchemaEvolution _),
-    "table_changes"    -> (tableChanges _),
-    "table_changes_range" -> (tableChangesRange _),
-    "mv_join_from_changes" -> (mvJoinFromChanges _),
-    "table_clone_merged" -> (tableCloneMerged _)
-  )
+  val mergeUpsertMorOracle: String = """
+SELECT o_orderstatus, count(*) AS n_orders,
+       CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
+FROM (
+  SELECT o_orderstatus,
+         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10.0
+              ELSE o_totalprice END AS p
+  FROM orders
+  UNION ALL
+  SELECT 'N' AS o_orderstatus, o_totalprice + 5.0 AS p
+  FROM orders WHERE o_orderkey % 13 = 0
+)
+GROUP BY 1 ORDER BY 1"""
 
-  val oracleSql: Map[String, String] = Map(
-    // the merged clone must serve the source's merge-applied state —
-    // same restatement as merge_upsert_mor
-    "table_clone_merged" -> """
-SELECT o_orderstatus, count(*) AS n_orders,
-       CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
-FROM (
-  SELECT o_orderstatus,
-         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10.0
-              ELSE o_totalprice END AS p
-  FROM orders
-  UNION ALL
-  SELECT 'N' AS o_orderstatus, o_totalprice + 5.0 AS p
-  FROM orders WHERE o_orderkey % 13 = 0
-)
-GROUP BY 1 ORDER BY 1""",
-    "merge_upsert_mor" -> """
-SELECT o_orderstatus, count(*) AS n_orders,
-       CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
-FROM (
-  SELECT o_orderstatus,
-         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10.0
-              ELSE o_totalprice END AS p
-  FROM orders
-  UNION ALL
-  SELECT 'N' AS o_orderstatus, o_totalprice + 5.0 AS p
-  FROM orders WHERE o_orderkey % 13 = 0
-)
-GROUP BY 1 ORDER BY 1""",
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("merge_upsert_mor", mergeUpsertMor, mergeUpsertMorOracle),
     // the clause matrix restated over the source: matched F → source
     // price (+7) and the marker; matched P → gone; matched O →
     // untouched; unmatched key%3=0 → gone; inserts carry status X.
-    "merge_full" -> """
+    QuerySpec("merge_full", mergeFullMatrix, """
 SELECT o_orderstatus, count(*) AS n_orders,
        CAST(sum(upd) AS BIGINT) AS n_updated,
        CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
@@ -829,11 +807,11 @@ FROM (
   SELECT 'X', 0, o_totalprice
   FROM orders WHERE o_orderkey % 19 = 0
 )
-GROUP BY 1 ORDER BY 1""",
+GROUP BY 1 ORDER BY 1"""),
     // the evolving merge restated: key%4=0 rows re-priced with a channel,
     // everything else untouched with channel 'none' (NULL rendered so both
     // engines group and ORDER identically)
-    "merge_schema_evolution" -> """
+    QuerySpec("merge_schema_evolution", mergeSchemaEvolution, """
 SELECT o_orderstatus, o_channel, count(*) AS n_rows,
        CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
 FROM (
@@ -845,42 +823,12 @@ FROM (
   SELECT o_orderstatus, 'none', o_totalprice
   FROM orders WHERE o_orderkey % 4 <> 0
 )
-GROUP BY 1, 2 ORDER BY 1, 2""",
-    // the join-MV restated from source: the twice-merged fact (same
-    // simulation as merge_upsert_mor) joined to customer, per segment
-    "mv_join_from_changes" -> """
-SELECT c_mktsegment, count(*) AS n_orders,
-       CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
-FROM (
-  SELECT o_custkey,
-         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10.0
-              ELSE o_totalprice END AS p
-  FROM orders
-  UNION ALL
-  SELECT o_custkey, o_totalprice + 5.0 AS p
-  FROM orders WHERE o_orderkey % 13 = 0
-) f JOIN customer c ON f.o_custkey = c.c_custkey
-GROUP BY 1 ORDER BY 1""",
-    // commit 2 of the upsert feed alone (the range read's floor): batch2
-    // re-priced the rows batch1 inserted — preimages at their inserted
-    // (original-price, status N) state, postimages +5
-    "table_changes_range" -> """
-SELECT CAST(2 AS BIGINT) AS commit_version, ct AS change_type,
-       count(*) AS n_rows,
-       CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
-FROM (
-  SELECT 'update_preimage' AS ct, o_totalprice AS p
-  FROM orders WHERE o_orderkey % 13 = 0
-  UNION ALL
-  SELECT 'update_postimage', o_totalprice + 5.0
-  FROM orders WHERE o_orderkey % 13 = 0
-)
-GROUP BY 1, 2 ORDER BY 1, 2""",
+GROUP BY 1, 2 ORDER BY 1, 2"""),
     // the full-matrix CDF restated from source: updates are matched 'F'
     // rows (pre = original, post = source price = original+7); deletes
     // are matched 'P' rows plus unmatched key%3=0 rows at their original
     // values; inserts are the key%19=0 re-entries (price unchanged).
-    "table_changes" -> """
+    QuerySpec("table_changes", tableChanges, """
 SELECT CAST(cv AS BIGINT) AS commit_version, ct AS change_type,
        count(*) AS n_rows,
        CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
@@ -898,6 +846,51 @@ FROM (
   SELECT 1, 'insert', o_totalprice
   FROM orders WHERE o_orderkey % 19 = 0
 )
-GROUP BY 1, 2 ORDER BY 1, 2"""
+GROUP BY 1, 2 ORDER BY 1, 2"""),
+    // commit 2 of the upsert feed alone (the range read's floor): batch2
+    // re-priced the rows batch1 inserted — preimages at their inserted
+    // (original-price, status N) state, postimages +5
+    QuerySpec("table_changes_range", tableChangesRange, """
+SELECT CAST(2 AS BIGINT) AS commit_version, ct AS change_type,
+       count(*) AS n_rows,
+       CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
+FROM (
+  SELECT 'update_preimage' AS ct, o_totalprice AS p
+  FROM orders WHERE o_orderkey % 13 = 0
+  UNION ALL
+  SELECT 'update_postimage', o_totalprice + 5.0
+  FROM orders WHERE o_orderkey % 13 = 0
+)
+GROUP BY 1, 2 ORDER BY 1, 2"""),
+    // the join-MV restated from source: the twice-merged fact (same
+    // simulation as merge_upsert_mor) joined to customer, per segment
+    QuerySpec("mv_join_from_changes", mvJoinFromChanges, """
+SELECT c_mktsegment, count(*) AS n_orders,
+       CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
+FROM (
+  SELECT o_custkey,
+         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10.0
+              ELSE o_totalprice END AS p
+  FROM orders
+  UNION ALL
+  SELECT o_custkey, o_totalprice + 5.0 AS p
+  FROM orders WHERE o_orderkey % 13 = 0
+) f JOIN customer c ON f.o_custkey = c.c_custkey
+GROUP BY 1 ORDER BY 1"""),
+    // the merged clone must serve the source's merge-applied state —
+    // same restatement as merge_upsert_mor
+    QuerySpec("table_clone_merged", tableCloneMerged, """
+SELECT o_orderstatus, count(*) AS n_orders,
+       CAST(sum(CAST(round(p * 100) AS BIGINT)) AS BIGINT) AS total_cents
+FROM (
+  SELECT o_orderstatus,
+         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 10.0
+              ELSE o_totalprice END AS p
+  FROM orders
+  UNION ALL
+  SELECT 'N' AS o_orderstatus, o_totalprice + 5.0 AS p
+  FROM orders WHERE o_orderkey % 13 = 0
+)
+GROUP BY 1 ORDER BY 1""")
   )
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1556,51 +1557,29 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN agg ON agg.doc_id = d.doc_id
 ORDER BY d.doc_id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_decode_jpeg_color" -> (decodeJpegColor _),
-    "multimodal_decode_jpeg_420" -> (decodeJpeg420 _),
-    "multimodal_decode_jpeg_progressive" -> (decodeJpegProgressive _),
-    "multimodal_meta"     -> (meta _),
-    "multimodal_features" -> (features _),
-    "multimodal_frames"   -> ((s: SparkSession, d: String) => frameSample(s, d)),
-    "multimodal_resize"   -> ((s: SparkSession, d: String) => resize(s, d)),
-    "multimodal_dedup"    -> (contentDedup _),
-    "multimodal_decode_wav" -> (decodeWav _),
-    "multimodal_downsample_wav" -> (downsampleWav _),
-    "multimodal_decode_ppm" -> (decodePpm _),
-    "multimodal_decode_png" -> (decodePng _),
-    "multimodal_decode_png16" -> (decodePng16 _),
-    "multimodal_decode_png_sub8" -> (decodePngSub8 _),
-    "multimodal_decode_jpeg" -> (decodeJpeg _),
-    "multimodal_decode_jpeg_lossless" -> (decodeJpegLossless _),
-    "multimodal_decode_jpeg_lossless_rgb" -> (decodeJpegLosslessRgb _),
-    "multimodal_decode_jpeg12" -> (decodeJpeg12 _),
-    "multimodal_decode_jpeg_arith" -> (decodeJpegArith _),
-    "multimodal_phash_dedup" -> (phashDedup _),
-    "multimodal_decode_gif" -> (decodeGif _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "multimodal_decode_jpeg_color" -> decodeJpegColorOracle,
-    "multimodal_decode_jpeg_420" -> decodeJpeg420Oracle,
-    "multimodal_decode_jpeg_progressive" -> decodeJpegProgressiveOracle,
-    "multimodal_meta"     -> metaOracle,
-    "multimodal_features" -> featuresOracle,
-    "multimodal_frames"   -> frameSampleOracle,
-    "multimodal_resize"   -> resizeOracle,
-    "multimodal_dedup"    -> contentDedupOracle,
-    "multimodal_decode_wav" -> decodeWavOracle,
-    "multimodal_downsample_wav" -> downsampleWavOracle,
-    "multimodal_decode_ppm" -> decodePpmOracle,
-    "multimodal_decode_png" -> decodePngOracle,
-    "multimodal_decode_png16" -> decodePng16Oracle,
-    "multimodal_decode_png_sub8" -> decodePngSub8Oracle,
-    "multimodal_decode_jpeg" -> decodeJpegOracle,
-    "multimodal_decode_jpeg_lossless" -> decodeJpegLosslessOracle,
-    "multimodal_decode_jpeg_lossless_rgb" -> decodeJpegLosslessRgbOracle,
-    "multimodal_decode_jpeg12" -> decodeJpeg12Oracle,
-    "multimodal_decode_jpeg_arith" -> decodeJpegArithOracle,
-    "multimodal_phash_dedup" -> phashDedupOracle,
-    "multimodal_decode_gif" -> decodeGifOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("multimodal_decode_jpeg_color", decodeJpegColor, decodeJpegColorOracle),
+    QuerySpec("multimodal_decode_jpeg_420", decodeJpeg420, decodeJpeg420Oracle),
+    QuerySpec("multimodal_decode_jpeg_progressive", decodeJpegProgressive,
+      decodeJpegProgressiveOracle),
+    QuerySpec("multimodal_meta", meta, metaOracle),
+    QuerySpec("multimodal_features", features, featuresOracle),
+    QuerySpec("multimodal_frames", (s, d) => frameSample(s, d), frameSampleOracle),
+    QuerySpec("multimodal_resize", (s, d) => resize(s, d), resizeOracle),
+    QuerySpec("multimodal_dedup", contentDedup, contentDedupOracle),
+    QuerySpec("multimodal_decode_wav", decodeWav, decodeWavOracle),
+    QuerySpec("multimodal_downsample_wav", downsampleWav, downsampleWavOracle),
+    QuerySpec("multimodal_decode_ppm", decodePpm, decodePpmOracle),
+    QuerySpec("multimodal_decode_png", decodePng, decodePngOracle),
+    QuerySpec("multimodal_decode_png16", decodePng16, decodePng16Oracle),
+    QuerySpec("multimodal_decode_png_sub8", decodePngSub8, decodePngSub8Oracle),
+    QuerySpec("multimodal_decode_jpeg", decodeJpeg, decodeJpegOracle),
+    QuerySpec("multimodal_decode_jpeg_lossless", decodeJpegLossless, decodeJpegLosslessOracle),
+    QuerySpec("multimodal_decode_jpeg_lossless_rgb", decodeJpegLosslessRgb,
+      decodeJpegLosslessRgbOracle),
+    QuerySpec("multimodal_decode_jpeg12", decodeJpeg12, decodeJpeg12Oracle),
+    QuerySpec("multimodal_decode_jpeg_arith", decodeJpegArith, decodeJpegArithOracle),
+    QuerySpec("multimodal_phash_dedup", phashDedup, phashDedupOracle),
+    QuerySpec("multimodal_decode_gif", decodeGif, decodeGifOracle)
   )
 }

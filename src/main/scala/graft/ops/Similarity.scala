@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1333,29 +1334,16 @@ SELECT k.query_id, k.k, CAST(coalesce(hits.hits, 0) AS BIGINT) AS hits,
 FROM k LEFT JOIN hits ON k.query_id = hits.query_id
 ORDER BY k.query_id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rrf_fusion"          -> (rrfFusion _),
-    "ann_recall_eval"     -> (annRecallEval _),
-    "hard_negatives"      -> (hardNegatives _),
-    "ann_topk_bruteforce" -> (annTopKSampled _),
-    "ann_topk_int8"       -> (annInt8TopKSampled _),
-    "ann_topk_lsh"        -> (annLshTopK _),
-    "ann_topk_ivf"        -> (annIvfTopKSampled _),
-    "ann_topk_pq"         -> (annPqTopKSampled _),
-    "ann_topk_ivfpq"      -> (annIvfPqTopKSampled _),
-    "knn_graph"           -> ((s: SparkSession, d: String) => knnGraph(s, d))
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "rrf_fusion"          -> rrfFusionOracle,
-    "ann_recall_eval"     -> annRecallEvalOracle,
-    "hard_negatives"      -> hardNegativesOracle,
-    "ann_topk_bruteforce" -> annTopKSampledOracle,
-    "ann_topk_int8"       -> annInt8SampledOracle,
-    "ann_topk_lsh"        -> annLshOracle,
-    "ann_topk_ivf"        -> annIvfSampledOracle,
-    "ann_topk_pq"         -> annPqSampledOracle,
-    "ann_topk_ivfpq"      -> annIvfPqSampledOracle,
-    "knn_graph"           -> knnGraphOracle()
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("rrf_fusion", rrfFusion, rrfFusionOracle),
+    QuerySpec("ann_recall_eval", annRecallEval, annRecallEvalOracle),
+    QuerySpec("hard_negatives", hardNegatives, hardNegativesOracle),
+    QuerySpec("ann_topk_bruteforce", annTopKSampled, annTopKSampledOracle),
+    QuerySpec("ann_topk_int8", annInt8TopKSampled, annInt8SampledOracle),
+    QuerySpec("ann_topk_lsh", annLshTopK, annLshOracle),
+    QuerySpec("ann_topk_ivf", annIvfTopKSampled, annIvfSampledOracle),
+    QuerySpec("ann_topk_pq", annPqTopKSampled, annPqSampledOracle),
+    QuerySpec("ann_topk_ivfpq", annIvfPqTopKSampled, annIvfPqSampledOracle),
+    QuerySpec("knn_graph", (s, d) => knnGraph(s, d), knnGraphOracle())
   )
 }

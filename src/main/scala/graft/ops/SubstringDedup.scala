@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -145,11 +146,7 @@ SELECT doc_a, doc_b, CAST(max(run_words) AS BIGINT) AS lcs_words,
        CAST(sum(run_words - ${L - 1}) AS BIGINT) AS n_anchor_matches
 FROM r GROUP BY doc_a, doc_b ORDER BY doc_a, doc_b"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_substring" -> ((s: SparkSession, d: String) => substringPairs(s, d))
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "dedup_substring" -> substringPairsOracle()
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_substring", (s, d) => substringPairs(s, d), substringPairsOracle())
   )
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,16 +59,12 @@ object TableStats {
   def analyzeOrders(s: SparkSession, d: String): DataFrame =
     analyze(Tables.orders(s, d), AnalyzedCols).orderBy("column_name")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "analyze_table_stats" -> (analyzeOrders _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "analyze_table_stats" -> AnalyzedCols.map(c => s"""
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("analyze_table_stats", analyzeOrders, AnalyzedCols.map(c => s"""
   SELECT '$c' AS column_name, count(*) AS n_rows,
          count(*) - count($c) AS n_nulls,
          count(DISTINCT $c) AS ndv,
          CAST(min($c) AS VARCHAR) AS min_s, CAST(max($c) AS VARCHAR) AS max_s
-  FROM orders""").mkString("SELECT * FROM (", "\nUNION ALL", ") ORDER BY column_name")
+  FROM orders""").mkString("SELECT * FROM (", "\nUNION ALL", ") ORDER BY column_name"))
   )
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -580,31 +581,17 @@ SELECT doc_id,
        md5(nfc_normalize(raw)) AS nfc_md5
 FROM raw ORDER BY doc_id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_nfc_normalize"   -> (nfcNormalizeCorpus _),
-    "tfidf_top_terms"      -> ((s: SparkSession, d: String) => tfidfTopTerms(s, d)),
-    "bm25_rank"            -> (bm25Rank _),
-    "sparse_retrieval"     -> ((s: SparkSession, d: String) => sparseRetrieval(s, d)),
-    "lexical_diversity"    -> (lexicalDiversity _),
-    "corpus_filter"        -> (corpusFilter _),
-    "text_langid"          -> (langId _),
-    "text_quality"         -> (quality _),
-    "text_token_count"     -> (tokenCount _),
-    "text_fingerprint"     -> (fingerprint _),
-    "text_normalize_dedup" -> (normalizeDedup _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "text_nfc_normalize"   -> nfcNormalizeCorpusOracle,
-    "tfidf_top_terms"      -> tfidfOracle,
-    "bm25_rank"            -> bm25RankOracle,
-    "sparse_retrieval"     -> sparseRetrievalOracle,
-    "lexical_diversity"    -> lexicalDiversityOracle,
-    "corpus_filter"        -> corpusFilterOracle,
-    "text_langid"          -> langIdOracle,
-    "text_quality"         -> qualityOracle,
-    "text_token_count"     -> tokenCountOracle,
-    "text_fingerprint"     -> fingerprintOracle,
-    "text_normalize_dedup" -> normalizeDedupOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("text_nfc_normalize", nfcNormalizeCorpus, nfcNormalizeCorpusOracle),
+    QuerySpec("tfidf_top_terms", (s, d) => tfidfTopTerms(s, d), tfidfOracle),
+    QuerySpec("bm25_rank", bm25Rank, bm25RankOracle),
+    QuerySpec("sparse_retrieval", (s, d) => sparseRetrieval(s, d), sparseRetrievalOracle),
+    QuerySpec("lexical_diversity", lexicalDiversity, lexicalDiversityOracle),
+    QuerySpec("corpus_filter", corpusFilter, corpusFilterOracle),
+    QuerySpec("text_langid", langId, langIdOracle),
+    QuerySpec("text_quality", quality, qualityOracle),
+    QuerySpec("text_token_count", tokenCount, tokenCountOracle),
+    QuerySpec("text_fingerprint", fingerprint, fingerprintOracle),
+    QuerySpec("text_normalize_dedup", normalizeDedup, normalizeDedupOracle)
   )
 }

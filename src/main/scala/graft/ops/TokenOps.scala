@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -615,31 +616,18 @@ FROM r ORDER BY bucket_cap"""
 
   // ---------------------------------------------------------------- wiring
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "length_bucket_batches" -> ((s: SparkSession, d: String) => lengthBucketBatches(s, d)),
-    "token_rarity"      -> (tokenRarity _),
-    "bpe_pair_counts"   -> (bpePairCounts _),
-    "doc_chunking"      -> (docChunking _),
-    "fim_transform"     -> (fimTransform _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "heavy_hitters"     -> (heavyHitters _),
-    "span_dedup"        -> (spanDedup _),
-    "lm_score"          -> (lmScore _),
-    "bpe_train"         -> (bpeTrain _),
-    "bpe_encode"        -> (bpeEncode _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "length_bucket_batches" -> lengthBucketBatchesOracle,
-    "token_rarity"      -> tokenRarityOracle,
-    "bpe_pair_counts"   -> bpePairCountsOracle,
-    "doc_chunking"      -> docChunkingOracle,
-    "fim_transform"     -> fimTransformOracle,
-    "dedup_incremental" -> dedupIncrementalOracle,
-    "heavy_hitters"     -> heavyHittersOracle,
-    "span_dedup"        -> spanDedupOracle,
-    "lm_score"          -> lmScoreOracle,
-    "bpe_train"         -> bpeTrainOracle,
-    "bpe_encode"        -> bpeEncodeOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("length_bucket_batches", (s, d) => lengthBucketBatches(s, d),
+      lengthBucketBatchesOracle),
+    QuerySpec("token_rarity", tokenRarity, tokenRarityOracle),
+    QuerySpec("bpe_pair_counts", bpePairCounts, bpePairCountsOracle),
+    QuerySpec("doc_chunking", docChunking, docChunkingOracle),
+    QuerySpec("fim_transform", fimTransform, fimTransformOracle),
+    QuerySpec("dedup_incremental", dedupIncremental, dedupIncrementalOracle),
+    QuerySpec("heavy_hitters", heavyHitters, heavyHittersOracle),
+    QuerySpec("span_dedup", spanDedup, spanDedupOracle),
+    QuerySpec("lm_score", lmScore, lmScoreOracle),
+    QuerySpec("bpe_train", bpeTrain, bpeTrainOracle),
+    QuerySpec("bpe_encode", bpeEncode, bpeEncodeOracle)
   )
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -114,14 +115,10 @@ SELECT p_partkey, p_size, price_c FROM m
 WHERE dom_max IS NULL OR dom_max <= p_size
 ORDER BY price_c, p_partkey"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "topk_per_group_agg" -> ((s: SparkSession, d: String) => topPartsPerSupplier(s, d)),
-    "skyline_parts"      -> (skylineParts _)
-  )
-
   /** Same semantics ⇒ same oracle as the window formulation. */
-  val oracleSql: Map[String, String] = Map(
-    "topk_per_group_agg" -> graft.queries.RelOps.oracleSql("window_rank_per_group"),
-    "skyline_parts"      -> skylinePartsOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("topk_per_group_agg", (s, d) => topPartsPerSupplier(s, d),
+      graft.queries.RelOps.windowRankPerGroupOracle),
+    QuerySpec("skyline_parts", skylineParts, skylinePartsOracle)
   )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -253,47 +254,34 @@ WHERE l_quantity * 5 * (SELECT count(*) FROM lineitem l2
     < (SELECT sum(l_quantity) FROM lineitem l2
        WHERE l2.l_partkey = l1.l_partkey)"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tpch_pricing_summary" -> (tpchPricingSummary _),
-    "tpch_small_quantity"  -> (tpchSmallQuantity _),
-    "gold_dim_customer" -> (goldDimCustomer _),
-    "gold_dim_part"     -> (goldDimPart _),
-    "gold_dim_supplier" -> (goldDimSupplier _),
-    "gold_dim_date"     -> (goldDimDate _),
-    "gold_fact_sales"   -> (goldFactSales _),
-    "q1_sales_per_month"    -> (q1SalesPerMonth _),
-    "q2_top_parts"          -> (q2TopParts _),
-    "q3_top_customers"      -> (q3TopCustomers _),
-    "q4_sales_by_nation"    -> (q4SalesByNation _),
-    "q5_supplier_popularity" -> (q5SupplierPopularity _)
-  )
+  val goldFactSalesOracle: String = ctes +
+    "SELECT * FROM fact_sales ORDER BY customer_sk, part_sk, supplier_sk, date_sk, price, ship_cost"
 
-  val oracleSql: Map[String, String] = Map(
-    "tpch_pricing_summary" -> tpchPricingSummaryOracle,
-    "tpch_small_quantity"  -> tpchSmallQuantityOracle,
-    "gold_dim_customer" -> (ctes +
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("tpch_pricing_summary", tpchPricingSummary, tpchPricingSummaryOracle),
+    QuerySpec("tpch_small_quantity", tpchSmallQuantity, tpchSmallQuantityOracle),
+    QuerySpec("gold_dim_customer", goldDimCustomer, ctes +
       "SELECT * FROM dim_customer ORDER BY customer_sk"),
-    "gold_dim_part" -> (ctes +
+    QuerySpec("gold_dim_part", goldDimPart, ctes +
       "SELECT * FROM dim_part ORDER BY part_sk"),
-    "gold_dim_supplier" -> (ctes +
+    QuerySpec("gold_dim_supplier", goldDimSupplier, ctes +
       "SELECT * FROM dim_supplier ORDER BY supplier_sk"),
-    "gold_dim_date" -> (ctes +
+    QuerySpec("gold_dim_date", goldDimDate, ctes +
       "SELECT * FROM dim_date ORDER BY full_date"),
-    "gold_fact_sales" -> (ctes +
-      "SELECT * FROM fact_sales ORDER BY customer_sk, part_sk, supplier_sk, date_sk, price, ship_cost"),
-    "q1_sales_per_month" -> (ctes + """
+    QuerySpec("gold_fact_sales", goldFactSales, goldFactSalesOracle),
+    QuerySpec("q1_sales_per_month", q1SalesPerMonth, ctes + """
 SELECT year_val, month_name, count(part_sk) AS n_sales,
        round(sum(CAST(round(price * 100) AS BIGINT)) / 100.0, 2) AS total_sales
 FROM fact_sales JOIN dim_date USING (date_sk)
 GROUP BY year_val, month_val, month_name
 ORDER BY year_val, month_val"""),
-    "q2_top_parts" -> (ctes + """
+    QuerySpec("q2_top_parts", q2TopParts, ctes + """
 SELECT part_sk, name, supplier_names, count(*) AS n_sold
 FROM fact_sales JOIN dim_part USING (part_sk)
 GROUP BY part_sk, name, supplier_names
 ORDER BY n_sold DESC, name ASC, part_sk ASC
 LIMIT 10"""),
-    "q3_top_customers" -> (ctes + """
+    QuerySpec("q3_top_customers", q3TopCustomers, ctes + """
 SELECT name, nation, total_spend FROM (
   SELECT customer_sk, name, nation,
          round(sum(price + ship_cost), 2) AS total_spend
@@ -301,13 +289,13 @@ SELECT name, nation, total_spend FROM (
   GROUP BY customer_sk, name, nation) t
 ORDER BY total_spend DESC, customer_sk ASC
 LIMIT 5"""),
-    "q4_sales_by_nation" -> (ctes + """
+    QuerySpec("q4_sales_by_nation", q4SalesByNation, ctes + """
 SELECT nation,
        round(sum(CAST(round(price * 100) AS BIGINT)) / 100.0, 2) AS total_sales
 FROM fact_sales JOIN dim_customer USING (customer_sk)
 GROUP BY nation
 ORDER BY total_sales DESC, nation ASC"""),
-    "q5_supplier_popularity" -> (ctes + """
+    QuerySpec("q5_supplier_popularity", q5SupplierPopularity, ctes + """
 SELECT supplier, count(*) AS n_shipments
 FROM fact_sales JOIN dim_supplier USING (supplier_sk)
 GROUP BY supplier

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -491,27 +492,15 @@ SELECT from_q, to_q, n_customers,
        CAST(n_customers * 1000000 // sum(n_customers) OVER (PARTITION BY from_q) AS BIGINT) AS row_share_ppm
 FROM g ORDER BY from_q, to_q"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "assoc_rules"       -> (assocRules _),
-    "rfm_segments"      -> (rfmSegments _),
-    "abc_classification" -> (abcClassification _),
-    "segment_migration" -> (segmentMigration _),
-    "copurchase_pairs"  -> (copurchasePairs _),
-    "cohort_retention"  -> (cohortRetention _),
-    "event_transitions" -> (eventTransitions _),
-    "rolling_active_users" -> (rollingActiveUsers _),
-    "attribution_first_touch" -> (attributionFirstTouch _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "assoc_rules"       -> assocRulesOracle,
-    "rfm_segments"      -> rfmSegmentsOracle,
-    "abc_classification" -> abcClassificationOracle,
-    "segment_migration" -> segmentMigrationOracle,
-    "copurchase_pairs"  -> copurchasePairsOracle,
-    "cohort_retention"  -> cohortRetentionOracle,
-    "rolling_active_users" -> rollingActiveUsersOracle,
-    "event_transitions" -> eventTransitionsOracle,
-    "attribution_first_touch" -> attributionFirstTouchOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("assoc_rules", assocRules, assocRulesOracle),
+    QuerySpec("rfm_segments", rfmSegments, rfmSegmentsOracle),
+    QuerySpec("abc_classification", abcClassification, abcClassificationOracle),
+    QuerySpec("segment_migration", segmentMigration, segmentMigrationOracle),
+    QuerySpec("copurchase_pairs", copurchasePairs, copurchasePairsOracle),
+    QuerySpec("cohort_retention", cohortRetention, cohortRetentionOracle),
+    QuerySpec("event_transitions", eventTransitions, eventTransitionsOracle),
+    QuerySpec("rolling_active_users", rollingActiveUsers, rollingActiveUsersOracle),
+    QuerySpec("attribution_first_touch", attributionFirstTouch, attributionFirstTouchOracle)
   )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -437,25 +438,14 @@ LEFT JOIN late l ON f.custkey = l.custkey
 WHERE o.c_name IS NULL
 ORDER BY f.custkey"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "prorate_allocation"    -> (prorateAllocation _),
-    "inferred_dim_backfill" -> (inferredDimBackfill _),
-    "scd1_upsert"       -> (scd1Upsert _),
-    "scd2_history"      -> (scd2History _),
-    "pit_join"          -> (pitJoin _),
-    "bitemporal_asof"   -> (bitemporalAsof _),
-    "stratified_sample" -> (stratifiedSample _),
-    "forget_keys"       -> (forgetKeys _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "prorate_allocation"    -> prorateAllocationOracle,
-    "inferred_dim_backfill" -> inferredDimBackfillOracle,
-    "scd1_upsert"       -> scd1UpsertOracle,
-    "scd2_history"      -> scd2HistoryOracle,
-    "pit_join"          -> pitJoinOracle,
-    "bitemporal_asof"   -> bitemporalAsofOracle,
-    "stratified_sample" -> stratifiedSampleOracle,
-    "forget_keys"       -> forgetKeysOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("prorate_allocation", prorateAllocation, prorateAllocationOracle),
+    QuerySpec("inferred_dim_backfill", inferredDimBackfill, inferredDimBackfillOracle),
+    QuerySpec("scd1_upsert", scd1Upsert, scd1UpsertOracle),
+    QuerySpec("scd2_history", scd2History, scd2HistoryOracle),
+    QuerySpec("pit_join", pitJoin, pitJoinOracle),
+    QuerySpec("bitemporal_asof", bitemporalAsof, bitemporalAsofOracle),
+    QuerySpec("stratified_sample", stratifiedSample, stratifiedSampleOracle),
+    QuerySpec("forget_keys", forgetKeys, forgetKeysOracle)
   )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -964,61 +965,32 @@ ORDER BY n_name, c_acctbal DESC, c_name"""
 
   val lateralTopkOracle: String = lateralTopkSql
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "lateral_topk"        -> (lateralTopk _),
-    "recursive_hierarchy" -> (recursiveHierarchy _),
-    "recursive_subtree_rollup" -> (recursiveSubtreeRollup _),
-    "schema_evolution"  -> (schemaEvolution _),
-    "map_ops"           -> (mapOps _),
-    "jsonl_roundtrip"   -> (jsonlRoundtrip _),
-    "json_bad_records"  -> (jsonBadRecords _),
-    "pii_scrub"         -> (piiScrub _),
-    "conditional_agg"   -> (conditionalAgg _),
-    "argmax_per_group"  -> (argmaxPerGroup _),
-    "histogram_prices"  -> (histogramPrices _),
-    "orc_roundtrip"     -> (orcRoundtrip _),
-    "lateral_explode"   -> (lateralExplode _),
-    "zorder_cluster"    -> (zorderCluster _),
-    "random_projection" -> (randomProjection _),
-    "quantile_buckets"  -> (quantileBuckets _),
-    "time_travel_read"  -> (timeTravelRead _),
-    "table_restore"     -> (tableRestore _),
-    "table_clone"       -> (tableClone _),
-    "table_rename_column" -> (tableRenameColumn _),
-    "constrained_write" -> (constrainedWrite _),
-    "generated_columns" -> (generatedColumns _),
-    "version_diff"      -> (versionDiff _),
-    "mv_cdc_refresh"    -> (mvCdcRefresh _),
-    "gen_source_scan"   -> (genSourceScan _),
-    "compact_small_files" -> (compactSmallFiles _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "lateral_topk"        -> lateralTopkOracle,
-    "recursive_hierarchy" -> recursiveHierarchyOracle,
-    "recursive_subtree_rollup" -> recursiveSubtreeRollupOracle,
-    "schema_evolution"  -> schemaEvolutionOracle,
-    "map_ops"           -> mapOpsOracle,
-    "jsonl_roundtrip"   -> jsonlRoundtripOracle,
-    "json_bad_records"  -> jsonBadRecordsOracle,
-    "pii_scrub"         -> piiScrubOracle,
-    "conditional_agg"   -> conditionalAggOracle,
-    "argmax_per_group"  -> argmaxPerGroupOracle,
-    "histogram_prices"  -> histogramPricesOracle,
-    "orc_roundtrip"     -> orcRoundtripOracle,
-    "lateral_explode"   -> lateralExplodeOracle,
-    "zorder_cluster"    -> zorderClusterOracle,
-    "random_projection" -> randomProjectionOracle,
-    "quantile_buckets"  -> quantileBucketsOracle,
-    "time_travel_read"  -> timeTravelReadOracle,
-    "table_restore"     -> tableRestoreOracle,
-    "table_clone"       -> tableCloneOracle,
-    "table_rename_column" -> tableRenameColumnOracle,
-    "constrained_write" -> constrainedWriteOracle,
-    "generated_columns" -> generatedColumnsOracle,
-    "version_diff"      -> versionDiffOracle,
-    "mv_cdc_refresh"    -> mvCdcRefreshOracle,
-    "gen_source_scan"   -> genSourceScanOracle,
-    "compact_small_files" -> compactSmallFilesOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("lateral_topk", lateralTopk, lateralTopkOracle),
+    QuerySpec("recursive_hierarchy", recursiveHierarchy, recursiveHierarchyOracle),
+    QuerySpec("recursive_subtree_rollup", recursiveSubtreeRollup, recursiveSubtreeRollupOracle),
+    QuerySpec("schema_evolution", schemaEvolution, schemaEvolutionOracle),
+    QuerySpec("map_ops", mapOps, mapOpsOracle),
+    QuerySpec("jsonl_roundtrip", jsonlRoundtrip, jsonlRoundtripOracle),
+    QuerySpec("json_bad_records", jsonBadRecords, jsonBadRecordsOracle),
+    QuerySpec("pii_scrub", piiScrub, piiScrubOracle),
+    QuerySpec("conditional_agg", conditionalAgg, conditionalAggOracle),
+    QuerySpec("argmax_per_group", argmaxPerGroup, argmaxPerGroupOracle),
+    QuerySpec("histogram_prices", histogramPrices, histogramPricesOracle),
+    QuerySpec("orc_roundtrip", orcRoundtrip, orcRoundtripOracle),
+    QuerySpec("lateral_explode", lateralExplode, lateralExplodeOracle),
+    QuerySpec("zorder_cluster", zorderCluster, zorderClusterOracle),
+    QuerySpec("random_projection", randomProjection, randomProjectionOracle),
+    QuerySpec("quantile_buckets", quantileBuckets, quantileBucketsOracle),
+    QuerySpec("time_travel_read", timeTravelRead, timeTravelReadOracle),
+    QuerySpec("table_restore", tableRestore, tableRestoreOracle),
+    QuerySpec("table_clone", tableClone, tableCloneOracle),
+    QuerySpec("table_rename_column", tableRenameColumn, tableRenameColumnOracle),
+    QuerySpec("constrained_write", constrainedWrite, constrainedWriteOracle),
+    QuerySpec("generated_columns", generatedColumns, generatedColumnsOracle),
+    QuerySpec("version_diff", versionDiff, versionDiffOracle),
+    QuerySpec("mv_cdc_refresh", mvCdcRefresh, mvCdcRefreshOracle),
+    QuerySpec("gen_source_scan", genSourceScan, genSourceScanOracle),
+    QuerySpec("compact_small_files", compactSmallFiles, compactSmallFilesOracle)
   )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -601,35 +602,19 @@ SELECT c.c_custkey, c.c_name, count(o.o_custkey) AS n_orders,
 FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
 GROUP BY 1, 2 ORDER BY 1"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_write_roundtrip" -> (writeRoundtrip _),
-    "snapshot_star_read" -> (snapshotStarRead _),
-    "snapshot_time_travel" -> (snapshotTimeTravel _),
-    "snapshot_cdf" -> (snapshotCdf _),
-    "snapshot_restore" -> (snapshotRestore _),
-    "snapshot_checked_commit" -> (snapshotCheckedCommit _),
-    "typed_dataset_agg"        -> (typedDatasetAgg _),
-    "typed_cogroup"            -> (typedCogroup _),
-    "json_extract_props"       -> (jsonExtract _),
-    "variant_shred"            -> (variantShred _),
-    "csv_roundtrip"            -> (csvRoundtrip _),
-    "table_diff_buckets"       -> (tableDiffBuckets _),
-    "dpp_star_scan"            -> (dppStarScan _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "pipeline_write_roundtrip" -> Analytics.oracleSql("gold_fact_sales"),
-    "snapshot_star_read" -> snapshotStarReadOracle,
-    "snapshot_time_travel" -> snapshotTimeTravelOracle,
-    "snapshot_cdf" -> snapshotCdfOracle,
-    "snapshot_restore" -> snapshotRestoreOracle,
-    "snapshot_checked_commit" -> snapshotCheckedCommitOracle,
-    "typed_dataset_agg"        -> typedDatasetAggOracle,
-    "typed_cogroup"            -> typedCogroupOracle,
-    "json_extract_props"       -> jsonExtractOracle,
-    "variant_shred"            -> variantShredOracle,
-    "csv_roundtrip"            -> csvRoundtripOracle,
-    "table_diff_buckets"       -> tableDiffBucketsOracle,
-    "dpp_star_scan"            -> dppStarScanOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("pipeline_write_roundtrip", writeRoundtrip, Analytics.goldFactSalesOracle),
+    QuerySpec("snapshot_star_read", snapshotStarRead, snapshotStarReadOracle),
+    QuerySpec("snapshot_time_travel", snapshotTimeTravel, snapshotTimeTravelOracle),
+    QuerySpec("snapshot_cdf", snapshotCdf, snapshotCdfOracle),
+    QuerySpec("snapshot_restore", snapshotRestore, snapshotRestoreOracle),
+    QuerySpec("snapshot_checked_commit", snapshotCheckedCommit, snapshotCheckedCommitOracle),
+    QuerySpec("typed_dataset_agg", typedDatasetAgg, typedDatasetAggOracle),
+    QuerySpec("typed_cogroup", typedCogroup, typedCogroupOracle),
+    QuerySpec("json_extract_props", jsonExtract, jsonExtractOracle),
+    QuerySpec("variant_shred", variantShred, variantShredOracle),
+    QuerySpec("csv_roundtrip", csvRoundtrip, csvRoundtripOracle),
+    QuerySpec("table_diff_buckets", tableDiffBuckets, tableDiffBucketsOracle),
+    QuerySpec("dpp_star_scan", dppStarScan, dppStarScanOracle)
   )
 }

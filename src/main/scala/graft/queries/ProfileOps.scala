@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -491,31 +492,17 @@ SELECT l_partkey, n_lines, min_unit, max_unit,
        CAST((max_unit - min_unit) * 1000000 // min_unit AS BIGINT) AS spread_ppm
 FROM p ORDER BY spread_ppm DESC, l_partkey LIMIT 50"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "single_source_risk" -> (singleSourceRisk _),
-    "price_dispersion"   -> (priceDispersion _),
-    "return_rate_trend" -> (returnRateTrend _),
-    "k_anonymity"    -> ((s: SparkSession, d: String) => kAnonymity(s, d)),
-    "skew_stats"     -> (skewStats _),
-    "profile_orders" -> (profileOrders _),
-    "text_top_bigrams" -> (topBigrams _),
-    "pmi_bigrams" -> ((s: SparkSession, d: String) => pmiBigrams(s, d)),
-    "ngram_udtf" -> (ngramUdtf _),
-    "dq_checks" -> (dqChecks _),
-    "observed_scan" -> (observedScan _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "single_source_risk" -> singleSourceRiskOracle,
-    "price_dispersion"   -> priceDispersionOracle,
-    "return_rate_trend" -> returnRateTrendOracle,
-    "k_anonymity" -> kAnonymityOracle,
-    "skew_stats" -> skewStatsOracle,
-    "profile_orders" -> profileOrdersOracle,
-    "text_top_bigrams" -> topBigramsOracle,
-    "pmi_bigrams" -> pmiBigramsOracle,
-    "ngram_udtf" -> ngramUdtfOracle,
-    "dq_checks" -> dqChecksOracle,
-    "observed_scan" -> observedScanOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("single_source_risk", singleSourceRisk, singleSourceRiskOracle),
+    QuerySpec("price_dispersion", priceDispersion, priceDispersionOracle),
+    QuerySpec("return_rate_trend", returnRateTrend, returnRateTrendOracle),
+    QuerySpec("k_anonymity", (s, d) => kAnonymity(s, d), kAnonymityOracle),
+    QuerySpec("skew_stats", skewStats, skewStatsOracle),
+    QuerySpec("profile_orders", profileOrders, profileOrdersOracle),
+    QuerySpec("text_top_bigrams", topBigrams, topBigramsOracle),
+    QuerySpec("pmi_bigrams", (s, d) => pmiBigrams(s, d), pmiBigramsOracle),
+    QuerySpec("ngram_udtf", ngramUdtf, ngramUdtfOracle),
+    QuerySpec("dq_checks", dqChecks, dqChecksOracle),
+    QuerySpec("observed_scan", observedScan, observedScanOracle)
   )
 }

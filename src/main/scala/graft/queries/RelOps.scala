@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -604,119 +605,7 @@ UNION ALL SELECT o_orderpriority, 'O', o FROM w
 UNION ALL SELECT o_orderpriority, 'P', p FROM w
 ORDER BY o_orderpriority, status"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "unpivot_melt"          -> (unpivotMelt _),
-    "string_funcs"          -> (stringFuncs _),
-    "date_funcs"            -> (dateFuncs _),
-    "sk_scalable_fact"      -> (skScalableFact _),
-    "scan_project_filter"   -> (scanProjectFilter _),
-    "sql_over_views"        -> (sqlOverViews _),
-    "project_rename_cast"   -> (projectRenameCast _),
-    "dropna_left_join"      -> (dropnaLeftJoin _),
-    "filter_predicates"     -> (filterPredicates _),
-    "join_semi"             -> (joinSemi _),
-    "join_anti"             -> (joinAnti _),
-    "agg_minmax"            -> (aggMinMax _),
-    "distinct_segments"     -> (distinctSegments _),
-    "stringagg_per_nation"  -> (stringAggPerNation _),
-    "rollup_sales"          -> (rollupSales _),
-    "rollup_grouping_id"    -> (rollupGroupingId _),
-    "null_semantics"        -> (nullSemantics _),
-    "paginated_topk"        -> (paginatedTopk _),
-    "paginated_keyset"      -> (paginatedKeyset _),
-    "window_rank_per_group" -> (windowRankPerGroup _),
-    "window_running_spend"  -> (windowRunningSpend _),
-    "window_distinct_counts" -> (windowDistinctCounts _),
-    "window_analytics"      -> (windowAnalytics _),
-    "grouping_sets_sales"   -> (groupingSetsSales _),
-    "pivot_status"          -> (pivotStatus _),
-    "stats_agg"             -> (statsAgg _),
-    "fuzzy_match_nations"   -> (fuzzyMatchNations _),
-    "scalar_subquery"       -> (scalarSubquery _),
-    "sample_rand"           -> (sampleRand _),
-    "union_keys"            -> (unionKeys _),
-    "except_unsold_parts"   -> (exceptUnsoldParts _),
-    "intersect_repeat_customers" -> (intersectRepeatCustomers _),
-    "except_all_parts"      -> (exceptAllParts _),
-    "intersect_all_customers" -> (intersectAllCustomers _),
-    "cube_sales"            -> (cubeSales _),
-    "scalar_funcs"          -> (scalarFuncs _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "unpivot_melt" -> unpivotMeltOracle,
-    "string_funcs" -> stringFuncsOracle,
-    "date_funcs" -> dateFuncsOracle,
-    "sk_scalable_fact" -> """
-SELECT CAST(row_number() OVER (ORDER BY l_orderkey, l_linenumber) AS BIGINT) AS line_sk,
-       l_orderkey, l_linenumber
-FROM lineitem ORDER BY line_sk""",
-    "scan_project_filter" -> """
-SELECT l_orderkey, l_linenumber, l_shipdate, l_extendedprice
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
-  AND l_extendedprice > 1000
-ORDER BY l_orderkey, l_linenumber""",
-    "sql_over_views" -> sqlOverViewsText,
-    "project_rename_cast" -> """
-SELECT o_orderkey AS okey, CAST(o_orderdate AS DATE) AS odate,
-       CAST(year(o_orderdate) AS INT) AS oyear,
-       CAST(floor(o_totalprice) AS BIGINT) AS price_floor,
-       upper(o_orderstatus) AS status_uc
-FROM orders ORDER BY okey""",
-    "dropna_left_join" -> """
-SELECT c_custkey, c_name, o_custkey AS matched
-FROM customer LEFT JOIN (SELECT DISTINCT o_custkey FROM orders) o
-  ON c_custkey = o_custkey
-WHERE o_custkey IS NOT NULL
-ORDER BY c_custkey""",
-    "filter_predicates" -> """
-SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
-FROM orders
-WHERE o_orderstatus = 'O' AND o_totalprice BETWEEN 50000 AND 200000
-  AND o_orderpriority IN ('1-URGENT', '2-HIGH')
-ORDER BY o_orderkey""",
-    "join_semi" -> """
-SELECT c_custkey, c_name FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-ORDER BY c_custkey""",
-    "join_anti" -> """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_totalprice > 300000)
-ORDER BY c_custkey""",
-    "agg_minmax" -> """
-SELECT min(o_orderdate) AS first_order, max(o_orderdate) AS last_order,
-       count(*) AS n_orders
-FROM orders""",
-    "distinct_segments" -> """
-SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment""",
-    "stringagg_per_nation" -> """
-SELECT n_name AS nation,
-       string_agg(DISTINCT c_name, ', ' ORDER BY c_name) AS customers
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name ORDER BY nation""",
-    "rollup_sales" -> """
-SELECT year_val, quarter_val,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       count(*) AS n_orders
-FROM (SELECT CAST(year(o_orderdate) AS INT) AS year_val,
-             CAST(quarter(o_orderdate) AS INT) AS quarter_val, o_totalprice
-      FROM orders) t
-GROUP BY ROLLUP (year_val, quarter_val)
-ORDER BY year_val ASC NULLS FIRST, quarter_val ASC NULLS FIRST""",
-    "rollup_grouping_id" -> rollupGroupingIdOracle,
-    "null_semantics" -> nullSemanticsOracle,
-    "paginated_topk" -> paginatedTopkOracle,
-    "paginated_keyset" -> paginatedKeysetOracle,
-    "cube_sales" -> """
-SELECT o_orderstatus, o_orderpriority,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents,
-       count(*) AS n_orders
-FROM orders
-GROUP BY CUBE (o_orderstatus, o_orderpriority)
-ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""",
-    "window_rank_per_group" -> """
+  val windowRankPerGroupOracle: String = """
 SELECT l_suppkey, l_partkey, total_qty, rnk FROM (
   SELECT l_suppkey, l_partkey, total_qty,
          CAST(row_number() OVER (PARTITION BY l_suppkey
@@ -724,21 +613,89 @@ SELECT l_suppkey, l_partkey, total_qty, rnk FROM (
   FROM (SELECT l_suppkey, l_partkey, sum(l_quantity) AS total_qty
         FROM lineitem GROUP BY l_suppkey, l_partkey) t) r
 WHERE rnk <= 3
-ORDER BY l_suppkey, rnk""",
-    "window_running_spend" -> """
+ORDER BY l_suppkey, rnk"""
+
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("unpivot_melt", unpivotMelt, unpivotMeltOracle),
+    QuerySpec("string_funcs", stringFuncs, stringFuncsOracle),
+    QuerySpec("date_funcs", dateFuncs, dateFuncsOracle),
+    QuerySpec("sk_scalable_fact", skScalableFact, """
+SELECT CAST(row_number() OVER (ORDER BY l_orderkey, l_linenumber) AS BIGINT) AS line_sk,
+       l_orderkey, l_linenumber
+FROM lineitem ORDER BY line_sk"""),
+    QuerySpec("scan_project_filter", scanProjectFilter, """
+SELECT l_orderkey, l_linenumber, l_shipdate, l_extendedprice
+FROM lineitem
+WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
+  AND l_extendedprice > 1000
+ORDER BY l_orderkey, l_linenumber"""),
+    QuerySpec("sql_over_views", sqlOverViews, sqlOverViewsText),
+    QuerySpec("project_rename_cast", projectRenameCast, """
+SELECT o_orderkey AS okey, CAST(o_orderdate AS DATE) AS odate,
+       CAST(year(o_orderdate) AS INT) AS oyear,
+       CAST(floor(o_totalprice) AS BIGINT) AS price_floor,
+       upper(o_orderstatus) AS status_uc
+FROM orders ORDER BY okey"""),
+    QuerySpec("dropna_left_join", dropnaLeftJoin, """
+SELECT c_custkey, c_name, o_custkey AS matched
+FROM customer LEFT JOIN (SELECT DISTINCT o_custkey FROM orders) o
+  ON c_custkey = o_custkey
+WHERE o_custkey IS NOT NULL
+ORDER BY c_custkey"""),
+    QuerySpec("filter_predicates", filterPredicates, """
+SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
+FROM orders
+WHERE o_orderstatus = 'O' AND o_totalprice BETWEEN 50000 AND 200000
+  AND o_orderpriority IN ('1-URGENT', '2-HIGH')
+ORDER BY o_orderkey"""),
+    QuerySpec("join_semi", joinSemi, """
+SELECT c_custkey, c_name FROM customer
+WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+ORDER BY c_custkey"""),
+    QuerySpec("join_anti", joinAnti, """
+SELECT c_custkey, c_name FROM customer
+WHERE NOT EXISTS (SELECT 1 FROM orders
+                  WHERE o_custkey = c_custkey AND o_totalprice > 300000)
+ORDER BY c_custkey"""),
+    QuerySpec("agg_minmax", aggMinMax, """
+SELECT min(o_orderdate) AS first_order, max(o_orderdate) AS last_order,
+       count(*) AS n_orders
+FROM orders"""),
+    QuerySpec("distinct_segments", distinctSegments, """
+SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment"""),
+    QuerySpec("stringagg_per_nation", stringAggPerNation, """
+SELECT n_name AS nation,
+       string_agg(DISTINCT c_name, ', ' ORDER BY c_name) AS customers
+FROM customer JOIN nation ON c_nationkey = n_nationkey
+GROUP BY n_name ORDER BY nation"""),
+    QuerySpec("rollup_sales", rollupSales, """
+SELECT year_val, quarter_val,
+       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents,
+       count(*) AS n_orders
+FROM (SELECT CAST(year(o_orderdate) AS INT) AS year_val,
+             CAST(quarter(o_orderdate) AS INT) AS quarter_val, o_totalprice
+      FROM orders) t
+GROUP BY ROLLUP (year_val, quarter_val)
+ORDER BY year_val ASC NULLS FIRST, quarter_val ASC NULLS FIRST"""),
+    QuerySpec("rollup_grouping_id", rollupGroupingId, rollupGroupingIdOracle),
+    QuerySpec("null_semantics", nullSemantics, nullSemanticsOracle),
+    QuerySpec("paginated_topk", paginatedTopk, paginatedTopkOracle),
+    QuerySpec("paginated_keyset", paginatedKeyset, paginatedKeysetOracle),
+    QuerySpec("window_rank_per_group", windowRankPerGroup, windowRankPerGroupOracle),
+    QuerySpec("window_running_spend", windowRunningSpend, """
 SELECT o_custkey, o_orderdate, o_orderkey,
        round(sum(o_totalprice) OVER (PARTITION BY o_custkey
          ORDER BY o_orderdate, o_orderkey
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_spend
 FROM orders
-ORDER BY o_custkey, o_orderdate, o_orderkey""",
-    "window_distinct_counts" -> """
+ORDER BY o_custkey, o_orderdate, o_orderkey"""),
+    QuerySpec("window_distinct_counts", windowDistinctCounts, """
 SELECT o_custkey, o_orderkey,
        count(DISTINCT o_orderpriority) OVER (PARTITION BY o_custkey
          ORDER BY o_orderdate, o_orderkey) AS n_prio
 FROM orders
-ORDER BY o_custkey, o_orderkey""",
-    "window_analytics" -> """
+ORDER BY o_custkey, o_orderkey"""),
+    QuerySpec("window_analytics", windowAnalytics, """
 SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
        CAST(row_number() OVER w AS INT) AS seq,
        lag(o_totalprice, 1) OVER w AS prev_price,
@@ -752,63 +709,70 @@ FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
        wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-ORDER BY o_custkey, seq""",
-    "grouping_sets_sales" -> """
+ORDER BY o_custkey, seq"""),
+    QuerySpec("grouping_sets_sales", groupingSetsSales, """
 SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
        CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""",
-    "pivot_status" -> """
+ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST"""),
+    QuerySpec("pivot_status", pivotStatus, """
 SELECT o_orderpriority,
        CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
        CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
        CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
 FROM orders
-GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "scalar_subquery" -> scalarSubquerySql,
-    "sample_rand" -> sampleRandSql,
-    "stats_agg" -> statsAggOracle,
-    "fuzzy_match_nations" -> fuzzyMatchOracle,
-    "union_keys" -> """
+GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
+    QuerySpec("stats_agg", statsAgg, statsAggOracle),
+    QuerySpec("fuzzy_match_nations", fuzzyMatchNations, fuzzyMatchOracle),
+    QuerySpec("scalar_subquery", scalarSubquery, scalarSubquerySql),
+    QuerySpec("sample_rand", sampleRand, sampleRandSql),
+    QuerySpec("union_keys", unionKeys, """
 SELECT c_custkey AS key, 'customer' AS src FROM customer
 UNION ALL
 SELECT s_suppkey AS key, 'supplier' AS src FROM supplier
-ORDER BY src, key""",
-    "except_unsold_parts" -> """
+ORDER BY src, key"""),
+    QuerySpec("except_unsold_parts", exceptUnsoldParts, """
 SELECT p_partkey FROM part
 EXCEPT
 SELECT l_partkey FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1995-07-01'
-ORDER BY p_partkey""",
-    "intersect_repeat_customers" -> """
+ORDER BY p_partkey"""),
+    QuerySpec("intersect_repeat_customers", intersectRepeatCustomers, """
 SELECT o_custkey FROM orders
 WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1995-07-01'
 INTERSECT
 SELECT o_custkey FROM orders
 WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-07-01'
-ORDER BY o_custkey""",
-    "except_all_parts" -> """
+ORDER BY o_custkey"""),
+    QuerySpec("except_all_parts", exceptAllParts, """
 WITH surv AS (
   SELECT l_partkey FROM lineitem
   EXCEPT ALL
   SELECT l_partkey FROM lineitem WHERE l_returnflag = 'R')
 SELECT l_partkey, count(*) AS net_lines
-FROM surv GROUP BY 1 ORDER BY net_lines DESC, l_partkey LIMIT 100""",
-    "intersect_all_customers" -> """
+FROM surv GROUP BY 1 ORDER BY net_lines DESC, l_partkey LIMIT 100"""),
+    QuerySpec("intersect_all_customers", intersectAllCustomers, """
 WITH s AS (
   SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
   INTERSECT ALL
   SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996)
 SELECT o_custkey, count(*) AS sustained_orders
-FROM s GROUP BY 1 ORDER BY sustained_orders DESC, o_custkey LIMIT 100""",
-    "scalar_funcs" -> """
+FROM s GROUP BY 1 ORDER BY sustained_orders DESC, o_custkey LIMIT 100"""),
+    QuerySpec("cube_sales", cubeSales, """
+SELECT o_orderstatus, o_orderpriority,
+       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents,
+       count(*) AS n_orders
+FROM orders
+GROUP BY CUBE (o_orderstatus, o_orderpriority)
+ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST"""),
+    QuerySpec("scalar_funcs", scalarFuncs, """
 SELECT l_orderkey, l_linenumber,
        CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax)) AS BIGINT) AS charge,
        concat_ws('-', l_returnflag, l_linestatus) AS flag_status,
        CASE WHEN l_quantity >= 25 THEN 'bulk' ELSE 'small' END AS size_class,
        coalesce(nullif(l_returnflag, 'N'), 'none') AS ret
 FROM lineitem
-ORDER BY l_orderkey, l_linenumber"""
+ORDER BY l_orderkey, l_linenumber""")
   )
 }

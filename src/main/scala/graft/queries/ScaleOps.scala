@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -752,48 +753,27 @@ SELECT count(*) AS n_lines,
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE p_size = 1"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "runtime_bloom_join" -> (runtimeBloomJoin _),
-    "aqe_skew_join"   -> (aqeSkewJoin _),
-    "preagg_join"     -> (preaggJoin _),
-    "auto_preagg_join" -> (autoPreaggJoin _),
-    "auto_preagg_multikey" -> (autoPreaggMultikey _),
-    "bucketed_join"   -> (bucketedJoin _),
-    "salted_agg"      -> (saltedAgg _),
-    "salted_distinct" -> (saltedDistinct _),
-    "salted_join"     -> (saltedJoin _),
-    "bloom_prune_join" -> (bloomPruneJoin _),
-    "percentiles"     -> (percentiles _),
-    "percentiles_disc" -> (percentilesDisc _),
-    "approx_percentiles" -> (approxPercentiles _),
-    "approx_distinct" -> (approxDistinct _),
-    "sketch_union_distinct" -> (sketchUnionDistinct _),
-    "sketch_intersection" -> (sketchIntersection _),
-    "shard_rebalance" -> (shardRebalance _),
-    "incremental_agg" -> (incrementalAgg _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "runtime_bloom_join" -> runtimeBloomJoinOracle,
-    "aqe_skew_join"   -> aqeSkewJoinOracle,
-    "preagg_join"     -> preaggJoinOracle,
-    "auto_preagg_join" -> autoPreaggJoinOracle,
-    "auto_preagg_multikey" -> autoPreaggMultikeyOracle,
-    "bucketed_join"   -> bucketedJoinOracle,
-    "salted_agg"      -> saltedAggOracle,
-    "salted_distinct" -> saltedDistinctOracle,
-    "salted_join"     -> saltedJoinOracle,
-    "bloom_prune_join" -> bloomPruneJoinOracle,
-    "percentiles"     -> percentilesOracle,
-    "percentiles_disc" -> percentilesDiscOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("runtime_bloom_join", runtimeBloomJoin, runtimeBloomJoinOracle),
+    QuerySpec("aqe_skew_join", aqeSkewJoin, aqeSkewJoinOracle),
+    QuerySpec("preagg_join", preaggJoin, preaggJoinOracle),
+    QuerySpec("auto_preagg_join", autoPreaggJoin, autoPreaggJoinOracle),
+    QuerySpec("auto_preagg_multikey", autoPreaggMultikey, autoPreaggMultikeyOracle),
+    QuerySpec("bucketed_join", bucketedJoin, bucketedJoinOracle),
+    QuerySpec("salted_agg", saltedAgg, saltedAggOracle),
+    QuerySpec("salted_distinct", saltedDistinct, saltedDistinctOracle),
+    QuerySpec("salted_join", saltedJoin, saltedJoinOracle),
+    QuerySpec("bloom_prune_join", bloomPruneJoin, bloomPruneJoinOracle),
+    QuerySpec("percentiles", percentiles, percentilesOracle),
+    QuerySpec("percentiles_disc", percentilesDisc, percentilesDiscOracle),
     // the approximate aggs hash their ERROR CONTRACT (exact value +
     // in-bound boolean), so they are fully oracle-checked despite
     // cross-engine sketch divergence
-    "approx_percentiles" -> approxPercentilesOracle,
-    "approx_distinct" -> approxDistinctOracle,
-    "sketch_union_distinct" -> sketchUnionDistinctOracle,
-    "sketch_intersection" -> sketchIntersectionOracle,
-    "shard_rebalance" -> shardRebalanceOracle,
-    "incremental_agg" -> incrementalAggOracle
+    QuerySpec("approx_percentiles", approxPercentiles, approxPercentilesOracle),
+    QuerySpec("approx_distinct", approxDistinct, approxDistinctOracle),
+    QuerySpec("sketch_union_distinct", sketchUnionDistinct, sketchUnionDistinctOracle),
+    QuerySpec("sketch_intersection", sketchIntersection, sketchIntersectionOracle),
+    QuerySpec("shard_rebalance", shardRebalance, shardRebalanceOracle),
+    QuerySpec("incremental_agg", incrementalAgg, incrementalAggOracle)
   )
 }

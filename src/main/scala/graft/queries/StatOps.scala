@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1228,49 +1229,26 @@ FROM e LEFT JOIN c USING (digit) CROSS JOIN t ORDER BY e.digit"""
 
   // ------------------------------------------------------------------ wiring
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "benford_digits"       -> (benfordDigits _),
-    "gini_pareto"          -> (giniPareto _),
-    "hhi_concentration"    -> (hhiConcentration _),
-    "ab_test_chi2"         -> (abTestChi2 _),
-    "cuped_adjustment"     -> (cupedAdjustment _),
-    "bootstrap_ci"         -> ((s: SparkSession, d: String) => bootstrapCi(s, d)),
-    "lorenz_curve"         -> (lorenzCurve _),
-    "weekday_profile"      -> (weekdayProfile _),
-    "purchase_cadence"     -> (purchaseCadence _),
-    "drift_ks"             -> (driftKs _),
-    "corr_matrix"          -> (corrMatrix _),
-    "ols_trend"            -> (olsTrend _),
-    "drift_chi2"           -> (driftChi2 _),
-    "window_range_frame"   -> (windowRangeFrame _),
-    "ntile_deciles"        -> (ntileDeciles _),
-    "outlier_zscore"       -> (outlierZscore _),
-    "robust_mad"           -> (robustMad _),
-    "forward_fill"         -> (forwardFill _),
-    "embedding_covariance" -> (embeddingCovariance _),
-    "embedding_pca"        -> (embeddingPca _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "benford_digits"       -> benfordDigitsOracle,
-    "gini_pareto"          -> giniParetoOracle,
-    "hhi_concentration"    -> hhiConcentrationOracle,
-    "ab_test_chi2"         -> abTestChi2Oracle,
-    "cuped_adjustment"     -> cupedAdjustmentOracle,
-    "bootstrap_ci"         -> bootstrapCiOracle,
-    "lorenz_curve"         -> lorenzCurveOracle,
-    "weekday_profile"      -> weekdayProfileOracle,
-    "purchase_cadence"     -> purchaseCadenceOracle,
-    "drift_ks"             -> driftKsOracle,
-    "corr_matrix"          -> corrMatrixOracle,
-    "ols_trend"            -> olsTrendOracle,
-    "drift_chi2"           -> driftChi2Oracle,
-    "window_range_frame"   -> windowRangeFrameOracle,
-    "ntile_deciles"        -> ntileDecilesOracle,
-    "outlier_zscore"       -> outlierZscoreOracle,
-    "robust_mad"           -> robustMadOracle,
-    "forward_fill"         -> forwardFillOracle,
-    "embedding_covariance" -> embeddingCovarianceOracle,
-    "embedding_pca"        -> embeddingPcaOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("benford_digits", benfordDigits, benfordDigitsOracle),
+    QuerySpec("gini_pareto", giniPareto, giniParetoOracle),
+    QuerySpec("hhi_concentration", hhiConcentration, hhiConcentrationOracle),
+    QuerySpec("ab_test_chi2", abTestChi2, abTestChi2Oracle),
+    QuerySpec("cuped_adjustment", cupedAdjustment, cupedAdjustmentOracle),
+    QuerySpec("bootstrap_ci", (s, d) => bootstrapCi(s, d), bootstrapCiOracle),
+    QuerySpec("lorenz_curve", lorenzCurve, lorenzCurveOracle),
+    QuerySpec("weekday_profile", weekdayProfile, weekdayProfileOracle),
+    QuerySpec("purchase_cadence", purchaseCadence, purchaseCadenceOracle),
+    QuerySpec("drift_ks", driftKs, driftKsOracle),
+    QuerySpec("corr_matrix", corrMatrix, corrMatrixOracle),
+    QuerySpec("ols_trend", olsTrend, olsTrendOracle),
+    QuerySpec("drift_chi2", driftChi2, driftChi2Oracle),
+    QuerySpec("window_range_frame", windowRangeFrame, windowRangeFrameOracle),
+    QuerySpec("ntile_deciles", ntileDeciles, ntileDecilesOracle),
+    QuerySpec("outlier_zscore", outlierZscore, outlierZscoreOracle),
+    QuerySpec("robust_mad", robustMad, robustMadOracle),
+    QuerySpec("forward_fill", forwardFill, forwardFillOracle),
+    QuerySpec("embedding_covariance", embeddingCovariance, embeddingCovarianceOracle),
+    QuerySpec("embedding_pca", embeddingPca, embeddingPcaOracle)
   )
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.QuerySpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -757,41 +758,22 @@ SELECT nation, count(*) AS n_months,
        CAST(max(ape_ppm) AS BIGINT) AS worst_ape_ppm
 FROM j GROUP BY nation ORDER BY nation"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cusum_changepoint"   -> (cusumChangepoint _),
-    "mom_growth_movers"   -> (momGrowthMovers _),
-    "seasonal_naive_backtest" -> (seasonalNaiveBacktest _),
-    "twap_per_user"       -> (twapPerUser _),
-    "event_funnel"        -> (eventFunnel _),
-    "order_lifecycle_funnel" -> (orderLifecycleFunnel _),
-    "order_status_dwell"  -> (orderStatusDwell _),
-    "order_stage_latency" -> (orderStageLatency _),
-    "timeseries_gapfill"  -> (gapfillHourly _),
-    "range_join_sessions" -> (rangeJoinSessions _),
-    "range_join_islands"  -> (rangeJoinIslands _),
-    "embedding_centroids" -> (embeddingCentroids _),
-    "array_ops"           -> (arrayOps _),
-    "array_hof"           -> (arrayHof _),
-    "vector_math"         -> (vectorMath _),
-    "interval_coverage"   -> (intervalCoverage _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "cusum_changepoint"   -> cusumChangepointOracle,
-    "mom_growth_movers"   -> momGrowthMoversOracle,
-    "seasonal_naive_backtest" -> seasonalNaiveBacktestOracle,
-    "twap_per_user"       -> twapPerUserOracle,
-    "event_funnel"        -> eventFunnelOracle,
-    "order_lifecycle_funnel" -> orderLifecycleFunnelOracle,
-    "order_status_dwell"  -> orderStatusDwellOracle,
-    "order_stage_latency" -> orderStageLatencyOracle,
-    "timeseries_gapfill"  -> gapfillHourlyOracle,
-    "range_join_sessions" -> rangeJoinSessionsOracle,
-    "range_join_islands"  -> rangeJoinIslandsOracle,
-    "embedding_centroids" -> embeddingCentroidsOracle,
-    "array_ops"           -> arrayOpsOracle,
-    "array_hof"           -> arrayHofOracle,
-    "vector_math"         -> vectorMathOracle,
-    "interval_coverage"   -> intervalCoverageOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("cusum_changepoint", cusumChangepoint, cusumChangepointOracle),
+    QuerySpec("mom_growth_movers", momGrowthMovers, momGrowthMoversOracle),
+    QuerySpec("seasonal_naive_backtest", seasonalNaiveBacktest, seasonalNaiveBacktestOracle),
+    QuerySpec("twap_per_user", twapPerUser, twapPerUserOracle),
+    QuerySpec("event_funnel", eventFunnel, eventFunnelOracle),
+    QuerySpec("order_lifecycle_funnel", orderLifecycleFunnel, orderLifecycleFunnelOracle),
+    QuerySpec("order_status_dwell", orderStatusDwell, orderStatusDwellOracle),
+    QuerySpec("order_stage_latency", orderStageLatency, orderStageLatencyOracle),
+    QuerySpec("timeseries_gapfill", gapfillHourly, gapfillHourlyOracle),
+    QuerySpec("range_join_sessions", rangeJoinSessions, rangeJoinSessionsOracle),
+    QuerySpec("range_join_islands", rangeJoinIslands, rangeJoinIslandsOracle),
+    QuerySpec("embedding_centroids", embeddingCentroids, embeddingCentroidsOracle),
+    QuerySpec("array_ops", arrayOps, arrayOpsOracle),
+    QuerySpec("array_hof", arrayHof, arrayHofOracle),
+    QuerySpec("vector_math", vectorMath, vectorMathOracle),
+    QuerySpec("interval_coverage", intervalCoverage, intervalCoverageOracle)
   )
 }

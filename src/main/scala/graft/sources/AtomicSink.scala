@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.QuerySpec
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util
@@ -106,12 +107,8 @@ SELECT o_orderstatus, count(*) AS n,
        min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
 FROM orders GROUP BY 1 ORDER BY 1"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dsv2_sink_roundtrip" -> (sinkRoundtrip _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "dsv2_sink_roundtrip" -> sinkRoundtripOracle
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dsv2_sink_roundtrip", sinkRoundtrip, sinkRoundtripOracle)
   )
 
   /** Read a sink directory with snapshot isolation: ONLY files listed in

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.QuerySpec
 import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -160,11 +161,7 @@ object SkippingFileIndex {
       .orderBy("o_orderstatus")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "auto_skipping_read" -> (autoSkippingRead _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "auto_skipping_read" -> DataSkipping.oracleSql("data_skipping_read")
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("auto_skipping_read", autoSkippingRead, DataSkipping.dataSkippingReadOracle)
   )
 }

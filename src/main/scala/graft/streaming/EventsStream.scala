@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.QuerySpec
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
@@ -1712,56 +1713,33 @@ FROM (
 )
 GROUP BY 1, 2 ORDER BY 1, 2"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_table_changes"   -> (tableChangesStream _),
-    "stream_mv_from_changes" -> (mvFromChangesStream _),
-    "stream_exactly_once"    -> (exactlyOnceIngest _),
-    "stream_minhash_dedup"   -> (minhashDedupStream _),
-    "stream_ann_serve"       -> (annServeStream _),
-    "stream_corpus_filter"   -> (corpusFilterStream _),
-    "stream_stream_join"     -> (streamStreamJoin _),
-    "stream_stream_outer"    -> (streamStreamOuter _),
-    "stream_enrich_join"     -> (enrichJoin _),
-    "stream_tumbling_counts" -> (tumblingCounts _),
-    "stream_drift_monitor"   -> (driftMonitor _),
-    "stream_transform_state" -> (transformState _),
-    "stream_state_inspect"   -> (stateInspect _),
-    "stream_approx_distinct" -> (approxDistinctStream _),
-    "stream_sliding_counts"  -> (slidingCounts _),
-    "stream_sessionize"      -> (sessionize _),
-    "stream_timer_sessions"  -> (timerSessions _),
-    "stream_session_window"  -> (sessionWindow _),
-    "stream_session_append"  -> (sessionWindowAppend _),
-    "stream_dedup"           -> (streamDedup _),
-    "stream_upsert_sink"     -> (upsertSink _),
-    "stream_skip_ingest"     -> (skipIngest _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    // streaming serving must equal the batch PQ result — shared oracle
-    "stream_ann_serve"       -> graft.ops.Similarity.annPqSampledOracle,
-    "stream_table_changes"   -> tableChangesStreamOracle,
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("stream_table_changes", tableChangesStream, tableChangesStreamOracle),
     // feed-maintained MV ≡ the merged table's aggregate: shares the
     // merge_upsert_mor restatement verbatim
-    "stream_mv_from_changes" -> graft.ops.MergeOnRead.oracleSql("merge_upsert_mor"),
-    "stream_exactly_once"    -> exactlyOnceIngestOracle,
-    "stream_minhash_dedup"   -> graft.ops.Dedup.minhashIncrementalOracle(),
-    "stream_corpus_filter"   -> corpusFilterStreamOracle,
-    "stream_stream_join"     -> streamStreamJoinOracle,
-    "stream_stream_outer"    -> streamStreamOuterOracle,
-    "stream_enrich_join"     -> enrichJoinOracle,
-    "stream_tumbling_counts" -> tumblingOracle,
-    "stream_drift_monitor"   -> driftMonitorOracle,
-    "stream_transform_state" -> transformStateOracle,
-    "stream_state_inspect"   -> stateInspectOracle,
-    "stream_approx_distinct" -> approxDistinctStreamOracle,
-    "stream_sliding_counts"  -> slidingOracle,
-    "stream_sessionize"      -> sessionizeOracle,
-    "stream_session_window"  -> sessionizeOracle, // built-in ≡ custom state
-    "stream_session_append"  -> sessionizeOracle, // terminal-flushed Append ≡ batch
-    "stream_timer_sessions"  -> sessionizeOracle, // timer-closed ≡ batch
-    "stream_dedup"           -> streamDedupOracle,
-    "stream_upsert_sink"     -> upsertSinkOracle,
-    "stream_skip_ingest"     -> skipIngestOracle
+    QuerySpec("stream_mv_from_changes", mvFromChangesStream,
+      graft.ops.MergeOnRead.mergeUpsertMorOracle),
+    QuerySpec("stream_exactly_once", exactlyOnceIngest, exactlyOnceIngestOracle),
+    QuerySpec("stream_minhash_dedup", minhashDedupStream,
+      graft.ops.Dedup.minhashIncrementalOracle()),
+    // streaming serving must equal the batch PQ result — shared oracle
+    QuerySpec("stream_ann_serve", annServeStream, graft.ops.Similarity.annPqSampledOracle),
+    QuerySpec("stream_corpus_filter", corpusFilterStream, corpusFilterStreamOracle),
+    QuerySpec("stream_stream_join", streamStreamJoin, streamStreamJoinOracle),
+    QuerySpec("stream_stream_outer", streamStreamOuter, streamStreamOuterOracle),
+    QuerySpec("stream_enrich_join", enrichJoin, enrichJoinOracle),
+    QuerySpec("stream_tumbling_counts", tumblingCounts, tumblingOracle),
+    QuerySpec("stream_drift_monitor", driftMonitor, driftMonitorOracle),
+    QuerySpec("stream_transform_state", transformState, transformStateOracle),
+    QuerySpec("stream_state_inspect", stateInspect, stateInspectOracle),
+    QuerySpec("stream_approx_distinct", approxDistinctStream, approxDistinctStreamOracle),
+    QuerySpec("stream_sliding_counts", slidingCounts, slidingOracle),
+    QuerySpec("stream_sessionize", sessionize, sessionizeOracle),
+    QuerySpec("stream_timer_sessions", timerSessions, sessionizeOracle), // timer-closed ≡ batch
+    QuerySpec("stream_session_window", sessionWindow, sessionizeOracle), // built-in ≡ custom state
+    QuerySpec("stream_session_append", sessionWindowAppend, sessionizeOracle), // terminal-flushed Append ≡ batch
+    QuerySpec("stream_dedup", streamDedup, streamDedupOracle),
+    QuerySpec("stream_upsert_sink", upsertSink, upsertSinkOracle),
+    QuerySpec("stream_skip_ingest", skipIngest, skipIngestOracle)
   )
 }

@@ -1,4 +1,4 @@
-package graft
+package graft.util
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
@@ -6,14 +6,14 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
-/** Shared plan-inspection helpers for specs. `TreeNode.collect` does NOT
-  * descend into AQE query stages (QueryStageExec is a leaf wrapper whose
-  * materialized subtree hangs off `.plan`), into AdaptiveSparkPlanExec's
-  * current plan, or into reused exchanges — so a typed
+/** Physical-plan walking. `TreeNode.collect` does NOT descend into AQE
+  * query stages (QueryStageExec is a leaf wrapper whose materialized
+  * subtree hangs off `.plan`), into AdaptiveSparkPlanExec's current plan,
+  * or into reused exchanges — so a typed
   * `plan.collect { case j: SortMergeJoinExec => }` silently misses every
   * join that executed inside a stage. These helpers expand all of those
   * boundaries explicitly. */
-object PlanTest {
+object PlanNodes {
 
   /** Every node of the physical plan, descending through AQE stages,
     * reused exchanges, and (optionally) cached-relation subtrees. */

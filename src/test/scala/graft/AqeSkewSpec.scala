@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.PlanNodes
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +11,7 @@ import graft.queries.ScaleOps
   * OptimizeSkewedJoin — the automatic runtime skew path a 100 TB job
   * leans on before manual salting — actually SPLITS the planted hot
   * partition, by inspecting the post-execution adaptive plan rather
-  * than trusting configuration. Plan traversal via [[PlanTest.flatten]]
+  * than trusting configuration. Plan traversal via [[PlanNodes.flatten]]
   * (the join executes inside an AQE query stage, which plain
   * `plan.collect` never descends into). */
 class AqeSkewSpec extends AnyFunSuite {
@@ -30,7 +31,7 @@ class AqeSkewSpec extends AnyFunSuite {
       concat(lit("g"), pmod(col("id"), lit(7L))).as("grp"))
     val joined = fact.join(dim, col("k") === col("k2"))
       .groupBy("grp").agg(sum("v").as("sv"), count(lit(1)).as("n"))
-    val nodes = PlanTest.executedNodes(joined)
+    val nodes = PlanNodes.executedNodes(joined)
     val smj = nodes.collect { case j: SortMergeJoinExec => j }
     assert(smj.nonEmpty,
       s"expected the non-broadcast regime to plan a SortMergeJoin:\n${joined.queryExecution.executedPlan.toString.take(2000)}")
@@ -42,7 +43,7 @@ class AqeSkewSpec extends AnyFunSuite {
     // same assertion on the REAL query at the gate's scale factor — the
     // hot partition (~80% of lineitem) clears the 64k threshold there
     val df = ScaleOps.aqeSkewJoin(spark, "/root/testdata/sf0.01")
-    val smj = PlanTest.executedNodes(df).collect { case j: SortMergeJoinExec => j }
+    val smj = PlanNodes.executedNodes(df).collect { case j: SortMergeJoinExec => j }
     assert(smj.exists(_.isSkewJoin),
       s"query's hot partition not split:\n${df.queryExecution.executedPlan.toString.take(2000)}")
   }

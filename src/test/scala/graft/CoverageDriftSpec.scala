@@ -6,14 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * map from SURVEY §2 rows to verifying queries, and it has been
   * hand-edited every round — so nothing stopped a new `SparkEntry
   * .queries` key from silently lacking a coverage row. This spec makes
-  * that drift a test failure in both directions that matter:
-  *
-  *  1. every `SparkEntry.queries` key must appear (backtick-quoted)
-  *     somewhere in COVERAGE.md — a new operator without a traceability
-  *     row fails the build;
-  *  2. every key must also have an oracle (or be on the explicit,
-  *     justified rows-only allowlist) — so "weaker rows-only check"
-  *     can never happen by accident.
+  * that drift a test failure: every `SparkEntry.queries` key must appear
+  * (backtick-quoted) somewhere in COVERAGE.md — a new operator without a
+  * traceability row fails the build. (Every query has an oracle by
+  * construction: a `QuerySpec` carries both.)
   */
 class CoverageDriftSpec extends AnyFunSuite {
 
@@ -34,21 +30,5 @@ class CoverageDriftSpec extends AnyFunSuite {
     }
     assert(missing.isEmpty,
       s"queries with no COVERAGE.md row (add one per key): ${missing.toSeq.sorted.mkString(", ")}")
-  }
-
-  test("every SparkEntry.queries key has an oracle (no silent rows-only)") {
-    // intentionally empty: every current query is oracle-checked; a key
-    // may only be added here with a justification comment
-    val rowsOnlyAllowlist = Set.empty[String]
-    val unoracled = SparkEntry.queries.keySet --
-      SparkEntry.oracleSql.keySet -- rowsOnlyAllowlist
-    assert(unoracled.isEmpty,
-      s"queries with no oracleSql entry: ${unoracled.toSeq.sorted.mkString(", ")}")
-  }
-
-  test("no orphan oracles (oracleSql key without a queries entry)") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty,
-      s"oracleSql entries with no query: ${orphans.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.PlanNodes
 import java.nio.file.Files
 
 import org.apache.spark.sql.catalyst.plans.LeftAnti
@@ -70,7 +71,7 @@ class DvBitmapSpec extends AnyFunSuite {
       val df = DeletionVectors.readWithDv(spark, base)
       assert(df.count() == (0 until 10000).count(_ % 3 != 0))
       assert(df.where(col("id") % 3 === 0).count() == 0)
-      val nodes = PlanTest.executedNodes(DeletionVectors.readWithDv(spark, base))
+      val nodes = PlanNodes.executedNodes(DeletionVectors.readWithDv(spark, base))
       val antis = nodes.collect {
         case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
       }
@@ -95,7 +96,7 @@ class DvBitmapSpec extends AnyFunSuite {
       assert(!DeletionVectors.hasBm(base), "sparse delete must not write bitmaps")
       val df = DeletionVectors.readWithDv(spark, base)
       assert(df.count() == 9997 && df.where(col("id") === 999L).count() == 0)
-      val antis = PlanTest.executedNodes(DeletionVectors.readWithDv(spark, base))
+      val antis = PlanNodes.executedNodes(DeletionVectors.readWithDv(spark, base))
         .collect { case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j }
       assert(antis.nonEmpty, "sparse path lost its anti-join")
       // push the LEADING id range over the threshold: the range-clustered
@@ -108,7 +109,7 @@ class DvBitmapSpec extends AnyFunSuite {
       assert(mixed.count() ==
         (0 until 10000).count(i => !Set(3, 999, 5000).contains(i) &&
           !(i < 2000 && i % 2 == 0)))
-      val nodes = PlanTest.executedNodes(DeletionVectors.readWithDv(spark, base))
+      val nodes = PlanNodes.executedNodes(DeletionVectors.readWithDv(spark, base))
       assert(nodes.exists(_.toString.contains("rle_contains")),
         "mixed table lost its bitmap filter")
       assert(nodes.collect {

@@ -97,10 +97,6 @@ class MedallionSpec extends AnyFunSuite {
     assert(q5SupplierPopularity(spark, sf).count() > 0)
   }
 
-  test("SparkEntry contract: every oracle key has a query") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-  }
-
   test("gold fact layout gives partition pruning on year-scoped scans") {
     val lake = s"/tmp/graft_lake_spec/${graft.ops.Dedup.hashCode()}"
     pipeline.Medallion.writeAll(spark, sf, lake)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.PlanNodes
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -13,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fails the suite rather than waiting for a human to re-read PLANS.md.
   *
   * Budgets are pinned to the CURRENT executed plan (via
-  * [[PlanTest.executedNodes]], which descends into AQE query stages) with
+  * [[PlanNodes.executedNodes]], which descends into AQE query stages) with
   * zero slack — they are regression tripwires, not aspirations. Counting
   * excludes subtrees inside cached (InMemoryTableScan) relations: those
   * exchanges were paid once at memo materialization, not per call.
@@ -38,7 +39,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private def audit(name: String, maxExchanges: Int, maxScans: Int): Audit = {
     val df = SparkEntry.queries(name)(spark, sf)
-    val a = Audit(PlanTest.executedNodes(df))
+    val a = Audit(PlanNodes.executedNodes(df))
     info(s"$name: exchanges=${a.exchanges} scans=${a.scans} bhj=${a.buildSides.size}")
     assert(!a.nodes.exists(_.isInstanceOf[CartesianProductExec]),
       s"$name plans a CartesianProduct")
@@ -50,7 +51,7 @@ class PlanAuditSpec extends AnyFunSuite {
         case BuildLeft  => j.left
         case BuildRight => j.right
       }
-      val scalar = PlanTest.flatten(build).exists {
+      val scalar = PlanNodes.flatten(build).exists {
         case h: org.apache.spark.sql.execution.aggregate.HashAggregateExec =>
           h.groupingExpressions.isEmpty
         case h: org.apache.spark.sql.execution.aggregate.SortAggregateExec =>
@@ -119,7 +120,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q1 star join broadcasts the dims, never lineitem") {
     val df = SparkEntry.queries("q1_sales_per_month")(spark, sf)
-    val a = Audit(PlanTest.executedNodes(df))
+    val a = Audit(PlanNodes.executedNodes(df))
     assert(a.buildSides.nonEmpty, "q1 must broadcast its dimension joins")
     a.buildSides.foreach(b =>
       assert(!b.exists(_.startsWith("l_")), s"fact side broadcast: $b"))

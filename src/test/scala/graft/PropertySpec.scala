@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.PlanNodes
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -272,10 +273,10 @@ class PropertySpec extends AnyFunSuite {
     // hint pins the scale-safe shape; this spec fails if it regresses.
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
-    // PlanTest.flatten: the join may sit inside an AQE query stage,
+    // PlanNodes.flatten: the join may sit inside an AQE query stage,
     // which plain plan.collect never descends into
     val df = graft.queries.ChangeOps.pitJoin(spark, sf)
-    val bhj = PlanTest.executedNodes(df)
+    val bhj = PlanNodes.executedNodes(df)
       .collect { case j: BroadcastHashJoinExec => j }
     assert(bhj.nonEmpty,
       s"expected a BroadcastHashJoin:\n${df.queryExecution.executedPlan.toString.take(1500)}")

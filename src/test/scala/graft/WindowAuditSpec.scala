@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.PlanNodes
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.{CollectLimitExec, FileSourceScanExec, GlobalLimitExec, SparkPlan, TakeOrderedAndProjectExec, UnionExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -86,7 +87,7 @@ class WindowAuditSpec extends AnyFunSuite {
       .filterNot(_.startsWith("stream_"))
       .foreach { name =>
         val df = SparkEntry.queries(name)(spark, sf)
-        PlanTest.flatten(df.queryExecution.sparkPlan).foreach {
+        PlanNodes.flatten(df.queryExecution.sparkPlan).foreach {
           case w: WindowExec if w.partitionSpec.isEmpty && !bounded(w.child) =>
             offenders += s"$name: ${w.windowExpression.mkString(", ").take(120)}"
           case _ => ()
