@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * scaladoc: shuffle partitions sized to the cluster (NOT the 200 default —
   * match cores locally, 2-3× total cores on a cluster), AQE on (runtime
   * coalescing + skew-join splitting), UTC session time zone (oracle/date
-  * parity), and the graft expression library registered for SQL use.
+  * parity), nanosecond parquet timestamps read as raw BIGINT nanos (see
+  * [[Tables.eventsRaw]]; a no-op for every other file), and the graft
+  * expression library registered for SQL use.
   * The default master is `local[$SPARK_GRAFT_CPUS]`, or `local[*]` when
   * that is unset. For a one-off A/B, a `-Dspark.*` JVM system property
   * sets any conf this builder leaves alone (`SparkConf` loads them).
@@ -42,6 +44,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
   }
 

@@ -102,7 +102,7 @@ object DataSkipping {
       Encoders.BINARY
   }
 
-  private val Sidecar = "_skip"
+  private[ops] val Sidecar = "_skip"
 
   /** Publish `df` at `base` clustered for skipping, and build the sidecar.
     *

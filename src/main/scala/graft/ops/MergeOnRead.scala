@@ -1,82 +1,221 @@
 package graft.ops
 
 import graft.QuerySpec
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.util.{AtomicTable, PathKeys, SessionCaches}
 
-/** Merge-on-read MERGE (upsert) — the full Delta-DV / Iceberg-v2 write
-  * shape on top of [[DeletionVectors]]: a MERGE batch neither rewrites nor
-  * shuffles the table. Matched rows die by POSITION (their `(file,
-  * row_index)` appends to the version's `_dv` sidecar) and the batch's
-  * new row versions append as fresh files to a `_mor` sidecar; the read
-  * composes `(data ∪ _mor) ANTI `_dv``. The reference's closest analog is
-  * the truncate-and-reload batch ETL (etl_lakehouse.py:21-35) — at 100 TB
-  * that rewrite costs the whole table per batch, while this MERGE costs
-  * O(batch): one table scan to locate matched positions (itself prunable
-  * by zone maps on the merge keys), kilobytes of DV, batch-sized inserts.
+/** The merge-on-read table: row-level DELETE and MERGE on top of
+  * [[AtomicTable]]'s immutable version directories, neither rewriting nor
+  * shuffling the table — the Delta-DV / Iceberg-v2 write shape. The
+  * reference's closest analog is the truncate-and-reload batch ETL
+  * (etl_lakehouse.py:21-35); at 100 TB that rewrite costs the whole table
+  * per batch, while a delete or merge here costs O(batch): one scan to
+  * classify rows, kilobytes of positions, batch-sized inserts.
   *
-  * Positions are uniform across data AND `_mor` files (`_metadata
-  * .row_index` is the row's ordinal within its immutable file), so a later
-  * merge that updates a row an earlier merge INSERTED works identically:
-  * its `_mor` position lands in the DV like any data-file position. The
-  * matched-key join broadcasts the batch's key set — right while batches
-  * are CDC-sized (≪ table); a table-sized backfill would flip to a
-  * shuffle join and should use `compactMerged`'s rewrite path instead.
-  * `compactMerged` pays the read debt back: survivors publish atomically
-  * as a fresh DV-free, MOR-free version (Delta `REORG ... APPLY (PURGE)`).
+  * A version directory holds its data files plus `_`-prefixed sidecars,
+  * which plain readers ignore and version pruning, time travel, restore
+  * and clone carry with the data they apply to:
+  *
+  *  - `_dv` — deleted positions `(fname, pos)`: the row's file NAME
+  *    (`_metadata.file_name`, task-UUID-unique and, unlike the path,
+  *    stable under hardlink relocation) and its ordinal within that
+  *    immutable file (`_metadata.row_index`). Deletes compose as set
+  *    semantics, so a re-recorded position cannot double-delete.
+  *  - `_mor` — row versions a merge inserted, as fresh files. Their
+  *    positions are uniform with data-file positions, so a later delete or
+  *    merge reaches a merge-inserted row exactly like an original one.
+  *  - `_dvbm` — for each file with more than [[BitmapThresholdPositions]]
+  *    deleted positions, those positions as one range-RLE bitmap
+  *    ([[graft.functions.RleBitmap]], 16 bytes per run — a dropped
+  *    partition is one run), applied as a codegen'd `rle_contains` filter
+  *    on the row index instead of a broadcast anti-join whose build side
+  *    would be gigabytes for a billion-row-file delete (Delta's DV-bitmap
+  *    threshold).
+  *  - `_skip` — the zone-map sidecar ([[DataSkipping]]). Its per-file row
+  *    counts against the DV's per-file position counts name the files
+  *    whose EVERY row is deleted; those leave the scan's path list.
+  *
+  * [[live]] is the only code that combines these. It resolves the version
+  * once and returns `(data ∪ _mor)` minus the deleted positions, with each
+  * row's position attached. The reads ([[readMerged]],
+  * [[readMergedEvolved]]), the compaction ([[compactMerged]]) and the
+  * writers ([[deleteWhere]], [[mergeUpsert]], [[mergeFull]]) all go
+  * through it, and every `_dv` append goes through [[appendPositions]].
+  * [[compactMerged]] pays the read debt back: the live rows publish
+  * atomically as a fresh sidecar-free version (Delta `REORG ... APPLY
+  * (PURGE)`). The matched-key joins broadcast the batch — right while
+  * batches are CDC-sized (≪ table); a table-sized backfill should publish
+  * a new version instead.
   */
 object MergeOnRead {
 
+  private val Dv = "_dv"
+  private val DvBm = "_dvbm"
   private val Mor = "_mor"
+  private val PosCols = Seq("__file", "__pos")
 
-  private def morPath(base: String): String =
-    s"${DeletionVectors.verDir(base)}/$Mor"
+  /** Per-file deleted-position count above which a file's deletes apply
+    * as a bitmap rather than as broadcast position rows. The default
+    * mirrors Delta's instinct (a few million positions ≈ tens of MB of
+    * broadcast rows); specs shrink it to exercise bitmaps at test scale. */
+  @volatile var BitmapThresholdPositions: Long = 1L << 21
 
-  private def hasMor(base: String): Boolean =
-    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(morPath(base)))
+  private def verDir(base: String): String =
+    AtomicTable.resolve(base).getOrElse(
+      throw new IllegalStateException(s"no published version at $base"))
 
-  /** Each row's relocation-stable physical position attached. */
-  private def withPos(df: DataFrame): DataFrame =
-    df.withColumn("__file", col("_metadata.file_name"))
-      .withColumn("__pos", col("_metadata.row_index"))
+  private def has(ver: String, sidecar: String): Boolean =
+    Files.isDirectory(Paths.get(ver, sidecar))
 
-  /** Live rows with positions: (data ∪ mor) ANTI dv, `__file`/`__pos`
-    * still attached (internal — callers project them away). The `_mor`
-    * scan reconciles footers (`mergeSchema`) and the union tolerates
-    * missing columns, so a schema-EVOLVED merge batch
-    * ([[readMergedEvolved]]) never breaks old readers: [[readMerged]]
-    * projects the original columns, which every file still carries.
-    * `evolveSchema` additionally footer-merges the DATA scan, so the
-    * output carries the UNION schema with NULL backfill — the
-    * [[readMergedEvolved]] path; plans differ only in the projection. */
-  private def liveWithPos(s: SparkSession, base: String,
-      evolveSchema: Boolean = false): DataFrame = {
-    def scan(dir: String, mergeSchema: Boolean): DataFrame = withPos(
-      if (mergeSchema) s.read.option("mergeSchema", "true").parquet(dir)
-      else s.read.parquet(dir))
-    val data = scan(DeletionVectors.verDir(base), evolveSchema)
-    val all =
-      if (hasMor(base))
-        data.unionByName(scan(morPath(base), mergeSchema = true),
-          allowMissingColumns = true)
-      else data
-    if (!DeletionVectors.hasDv(base)) all
+  private[graft] def hasBm(base: String): Boolean = has(verDir(base), DvBm)
+
+  /** The `_dv` positions; the schema is fixed, so the scan infers nothing. */
+  private def positions(s: SparkSession, ver: String): DataFrame =
+    s.read.schema("fname STRING, pos BIGINT").parquet(s"$ver/$Dv")
+
+  /** The live rows of version directory `ver`, each with its position
+    * (`__file`, `__pos`) attached for the writers; callers project the two
+    * away. The data schema is inferred once and the `_mor` scan reuses it,
+    * so a schema-EVOLVED merge batch never breaks this read: its extra
+    * columns are not projected. `evolve` instead footer-merges both the
+    * data and the `_mor` files and unions them by name, so the output
+    * carries the UNION schema with NULL backfill ([[readMergedEvolved]]).
+    *
+    * Deleted positions apply per file in one of three ways, each chosen
+    * from the sidecars on disk:
+    *  - a file whose every row is deleted (needs `_skip`) is dropped from
+    *    the scan's path list — zero data I/O for a dropped partition;
+    *  - a file with a `_dvbm` bitmap is filtered by `rle_contains` after a
+    *    broadcast join on its name (one tiny row per file);
+    *  - every other file anti-joins the broadcast position rows. When no
+    *    file is left on this form, no anti-join is planned at all.
+    * The data side keeps its partitioning and never shuffles. */
+  private def live(s: SparkSession, ver: String, evolve: Boolean = false): DataFrame = {
+    val reader = if (evolve) s.read.option("mergeSchema", "true") else s.read
+    val schema = reader.parquet(ver).schema
+    def withPos(df: DataFrame): DataFrame =
+      df.withColumn("__file", col("_metadata.file_name"))
+        .withColumn("__pos", col("_metadata.row_index"))
+    def scan(paths: String*): DataFrame = withPos(s.read.schema(schema).parquet(paths: _*))
+    val dv = if (has(ver, Dv)) Some(positions(s, ver)) else None
+    // file-count-sized metadata join, the same decision a Delta log replay
+    // makes when a file is 100% covered by its DV
+    val dead: Set[String] =
+      if (dv.isEmpty || !has(ver, DataSkipping.Sidecar)) Set.empty
+      else dv.get.distinct().groupBy("fname").agg(count(lit(1)).as("n_dead"))
+        .join(s.read.schema("fname STRING, rows BIGINT")
+          .parquet(s"$ver/${DataSkipping.Sidecar}"), "fname")
+        .where(col("n_dead") === col("rows"))
+        .select("fname").collect().map(_.getString(0)).toSet
+    val data =
+      if (dead.isEmpty) scan(ver)
+      else {
+        val listing = Files.list(Paths.get(ver))
+        val kept = try listing.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => !n.startsWith("_") && !n.startsWith(".") && !dead(n)).toSeq
+        finally listing.close()
+        if (kept.isEmpty) scan(ver).where(lit(false))
+        else scan(kept.map(n => s"$ver/$n"): _*)
+      }
+    var out =
+      if (!has(ver, Mor)) data
+      else data.unionByName(
+        if (evolve) withPos(reader.parquet(s"$ver/$Mor")) else scan(s"$ver/$Mor"),
+        allowMissingColumns = true)
+    dv.foreach { d =>
+      val bms = if (!has(ver, DvBm)) None
+        else Some(s.read.schema("fname STRING, bm BINARY").parquet(s"$ver/$DvBm"))
+      val bmNames = bms.fold(Set.empty[String])(
+        _.select("fname").collect().map(_.getString(0)).toSet) // file-count-sized
+      bms.foreach { bm =>
+        out = out.join(broadcast(bm.select(col("fname").as("__file"), col("bm").as("__bm"))),
+            Seq("__file"), "left")
+          .where(col("__bm").isNull ||
+            !graft.functions.GraftFunctions.rleContains(s, col("__bm"), col("__pos")))
+          .drop("__bm")
+      }
+      val offList = bmNames ++ dead
+      val list =
+        if (offList.isEmpty) d
+        else d.where(!col("fname").isin(offList.toSeq: _*))
+      if (offList.isEmpty || !list.isEmpty)
+        out = out.join(broadcast(list.select(col("fname").as("__file"), col("pos").as("__pos"))),
+          PosCols, "left_anti")
+    }
+    out
+  }
+
+  private def dataCols(live: DataFrame): Seq[String] =
+    live.columns.toSeq.filterNot(PosCols.contains)
+
+  /** The one `_dv` writer: append the positions of `rows` (a frame derived
+    * from [[live]]) to the version's deletion vector, then re-encode the
+    * `_dvbm` bitmaps when this is a delete (`encode`) or the version
+    * already carries bitmaps. So a merge that replaces rows of a bitmap
+    * file never hides under a stale bitmap, and a merge on a bitmap-free
+    * table runs no extra job. */
+  private def appendPositions(s: SparkSession, ver: String, rows: DataFrame,
+      encode: Boolean): Unit = {
+    rows.select(col("__file").as("fname"), col("__pos").as("pos"))
+      .coalesce(1)
+      .write.mode("append").parquet(s"$ver/$Dv")
+    if (encode || has(ver, DvBm)) encodeBitmaps(s, ver)
+  }
+
+  /** (Re)write `_dvbm`: one (fname, bm) row per file past the threshold,
+    * bm = the file's deleted positions coalesced into range-RLE runs. Run
+    * DETECTION is distributed — a per-file window pass marks run breaks and
+    * one groupBy collapses each run to (start, len) — so only the
+    * run-compressed form is ever collected into a single row for packing.
+    * Positions are distinct'd first, so re-recorded deletes don't grow the
+    * bitmap. (Adversarially NON-contiguous dense deletes degrade RLE to 16
+    * bytes per position — the point where a production engine switches to
+    * a roaring container; the threshold and the scan-side application are
+    * the same.) */
+  private def encodeBitmaps(s: SparkSession, ver: String): Unit = {
+    import s.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val dv = positions(s, ver).distinct()
+    val hotNames = dv.groupBy("fname").agg(count(lit(1)).as("n"))
+      .where(col("n") > BitmapThresholdPositions)
+      .select("fname").collect().map(_.getString(0)).toSeq // file-count-sized
+    val bmDir = s"$ver/$DvBm"
+    if (hotNames.isEmpty) AtomicTable.deleteRecursively(Paths.get(bmDir))
     else {
-      val dv = s.read.parquet(DeletionVectors.dvPath(base))
-        .select(col("fname").as("__file"), col("pos").as("__pos"))
-      all.join(broadcast(dv), Seq("__file", "__pos"), "left_anti")
+      val w = Window.partitionBy("fname").orderBy("pos")
+      dv.where(col("fname").isin(hotNames: _*))
+        .withColumn("prev", lag("pos", 1).over(w))
+        .withColumn("brk",
+          when(col("prev").isNull || col("pos") =!= col("prev") + 1, 1L).otherwise(0L))
+        .withColumn("run_id", sum("brk").over(w))
+        .groupBy("fname", "run_id")
+        .agg(min("pos").as("start"), count(lit(1)).as("len"))
+        .groupBy("fname")
+        .agg(sort_array(collect_list(struct(col("start").as("_1"),
+          col("len").as("_2")))).as("runs"))
+        .as[(String, Seq[(Long, Long)])]
+        .map { case (f, rs) => (f, graft.functions.RleBitmap.encode(rs)) }
+        .toDF("fname", "bm")
+        .coalesce(1).write.mode("overwrite").parquet(bmDir)
     }
   }
 
-  /** The table with every merge applied. */
-  def readMerged(s: SparkSession, base: String): DataFrame = {
-    val dataCols = AtomicTable.read(s, base).columns.map(col).toSeq
-    liveWithPos(s, base).select(dataCols: _*)
+  /** The table with every delete and merge applied. */
+  def readMerged(s: SparkSession, base: String): DataFrame =
+    live(s, verDir(base)).drop(PosCols: _*)
+
+  /** DELETE ... WHERE `pred`: record (never rewrite) the positions of the
+    * live rows matching `pred` — data-file rows and merge-inserted rows
+    * alike — then re-encode the bitmaps. */
+  def deleteWhere(s: SparkSession, base: String, pred: Column): Unit = {
+    val ver = verDir(base)
+    appendPositions(s, ver, live(s, ver).where(pred), encode = true)
   }
 
   /** Root-level change-data directory (Delta `_change_data` analog): it
@@ -106,9 +245,9 @@ object MergeOnRead {
   /** Write one commit's change rows into the feed under the v2 layout:
     * stage to a temp dir, then MOVE the part files in with the
     * `c<version>-` prefix (same-FS rename — atomic per file; a reader
-    * never sees a torn file). Also stamps the commit's base-version
-    * marker for the pin-aware sweep. */
-  private def writeChanges(df: DataFrame, base: String, v: Long): Unit = {
+    * never sees a torn file). Also stamps the commit's base version
+    * `ver` (the version directory it applied to) for the pin-aware sweep. */
+  private def writeChanges(df: DataFrame, base: String, v: Long, ver: String): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val dir = Paths.get(changesPath(base))
     Files.createDirectories(dir)
@@ -123,10 +262,9 @@ object MergeOnRead {
         Files.move(p, dir.resolve(s"c$v-${p.getFileName}"),
           StandardCopyOption.ATOMIC_MOVE)
       }
-      val basever = AtomicTable.resolve(base)
-        .map(p => Paths.get(p).getFileName.toString).getOrElse("_v0")
       val marker = dir.resolve(s"_c$v.base")
-      if (!Files.exists(marker)) Files.writeString(marker, basever + "\n")
+      if (!Files.exists(marker))
+        Files.writeString(marker, Paths.get(ver).getFileName.toString + "\n")
     } finally AtomicTable.deleteRecursively(tmp)
   }
 
@@ -188,7 +326,8 @@ object MergeOnRead {
         val prefix = s"c$v-"
         names.filter(_.startsWith(prefix))
           .foreach(n => Files.deleteIfExists(dir.resolve(n)))
-        writeChanges(old.filter(col("_commit_version") === v), base, v)
+        writeChanges(old.filter(col("_commit_version") === v), base, v,
+          AtomicTable.resolve(base).getOrElse("_v0"))
       }
       legacy.foreach(n => Files.deleteIfExists(dir.resolve(n)))
       true
@@ -329,16 +468,14 @@ object MergeOnRead {
     * DML instead of diffing versions after the fact). */
   def mergeUpsert(s: SparkSession, base: String, batch: DataFrame,
                   keyCol: String, cdfVersion: Option[Long] = None): Unit = {
+    val ver = verDir(base)
+    val rows = live(s, ver)
     val keys = batch.select(keyCol).distinct()
-    val matchedLive = liveWithPos(s, base).join(broadcast(keys), keyCol)
-    def dvAppend(m: DataFrame): Unit =
-      m.select(col("__file").as("fname"), col("__pos").as("pos"))
-        .coalesce(1)
-        .write.mode("append").parquet(DeletionVectors.dvPath(base))
+    val matchedLive = rows.join(broadcast(keys), keyCol)
     cdfVersion match {
       case None =>
-        dvAppend(matchedLive)
-        batch.coalesce(1).write.mode("append").parquet(morPath(base))
+        appendPositions(s, ver, matchedLive, encode = false)
+        batch.coalesce(1).write.mode("append").parquet(s"$ver/$Mor")
       case Some(v) =>
         // pin the classification with an EAGER localCheckpoint, not
         // persist+count: the sidecar appends below land under the cached
@@ -356,9 +493,9 @@ object MergeOnRead {
         // when the post/insert change rows run after the appends below —
         // the same recache hazard, one frame over
         val bpin = batch.localCheckpoint()
-        dvAppend(pinned)
-        bpin.coalesce(1).write.mode("append").parquet(morPath(base))
-        val tcols = AtomicTable.read(s, base).columns.toSeq
+        appendPositions(s, ver, pinned, encode = false)
+        bpin.coalesce(1).write.mode("append").parquet(s"$ver/$Mor")
+        val tcols = dataCols(rows)
         val matchedKeys = pinned.select(col(keyCol)).distinct()
         val pre = pinned.select(tcols.map(col): _*)
           .withColumn("_change_type", lit("update_preimage"))
@@ -371,7 +508,7 @@ object MergeOnRead {
         writeChanges(
           pre.unionByName(post).unionByName(ins)
             .withColumn("_commit_version", lit(v)),
-          base, v)
+          base, v, ver)
     }
   }
 
@@ -387,11 +524,8 @@ object MergeOnRead {
     * carries. Cost note: `mergeSchema` reconciles FOOTERS (one metadata
     * task per file), never data — at 100 TB the read plan is unchanged
     * except for the widened projection. */
-  def readMergedEvolved(s: SparkSession, base: String): DataFrame = {
-    val live = liveWithPos(s, base, evolveSchema = true)
-    val dataCols = live.columns.filterNot(_.startsWith("__")).map(col).toSeq
-    live.select(dataCols: _*)
-  }
+  def readMergedEvolved(s: SparkSession, base: String): DataFrame =
+    live(s, verDir(base), evolve = true).drop(PosCols: _*)
 
   /** Pay back the merge-on-read debt: publish the merged state as a fresh
     * version with empty sidecars, atomically. */
@@ -400,8 +534,6 @@ object MergeOnRead {
     AtomicTable.publish(base)(dir =>
       survivors.repartition(nFiles).write.mode("overwrite").parquet(dir))
   }
-
-  import org.apache.spark.sql.Column
 
   /** The FULL MERGE clause matrix — the Delta/Iceberg `MERGE INTO` shape
     * [[mergeUpsert]] only covers the upsert corner of:
@@ -451,7 +583,10 @@ object MergeOnRead {
     // localCheckpoint (LogicalRDD — no file relation for the recache to
     // match, and each is O(batch)-sized, never the table), and only THEN
     // touch the sidecars.
-    val joined = liveWithPos(s, base)
+    val ver = verDir(base)
+    val rows = live(s, ver)
+    val tcols = dataCols(rows)
+    val joined = rows
       .join(broadcast(srcP), col(keyCol) === col(srcKey), "left")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (dvOut, morOut, cdfOut) =
@@ -461,11 +596,9 @@ object MergeOnRead {
         val deleting =
           (matched && !matchedUpdateCond && matchedDeleteCond) ||
             (!matched && notMatchedBySourceDeleteCond)
-        val dv = joined.filter(updating || deleting)
-          .select(col("__file").as("fname"), col("__pos").as("pos"))
+        val dv = joined.filter(updating || deleting).select(PosCols.map(col): _*)
           .localCheckpoint()
 
-        val tcols = AtomicTable.read(s, base).columns.toSeq
         val updated = joined.filter(updating)
           .select(tcols.map(c => updateSet.getOrElse(c, col(c)).as(c)): _*)
         val inserted =
@@ -499,9 +632,9 @@ object MergeOnRead {
         }
         (dv, mor, cdf)
       } finally joined.unpersist()
-    dvOut.coalesce(1).write.mode("append").parquet(DeletionVectors.dvPath(base))
-    morOut.coalesce(1).write.mode("append").parquet(morPath(base))
-    cdfVersion.zip(cdfOut).foreach { case (v, cdf) => writeChanges(cdf, base, v) }
+    appendPositions(s, ver, dvOut, encode = false)
+    morOut.coalesce(1).write.mode("append").parquet(s"$ver/$Mor")
+    cdfVersion.zip(cdfOut).foreach { case (v, cdf) => writeChanges(cdf, base, v, ver) }
   }
 
   // --------------------------------------------------------------- queries

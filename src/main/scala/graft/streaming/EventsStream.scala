@@ -84,96 +84,6 @@ object EventsStream {
   private def streamSession(s: SparkSession, d: String): SparkSession =
     streamSessionN(s, statePartitionsFor(d), largeStateFor(d))
 
-  /** Loud PRE-START guard for a REUSED checkpoint against the
-    * dataset-sized state partitioning (r14 verdict #7). The partition
-    * count is a deterministic function of the dataset's events file
-    * size — correct for immutable fixtures, but a dataset grown or
-    * shrunk IN PLACE changes the computed count while the checkpoint's
-    * state layout stays pinned at whatever the first run recorded, and
-    * Spark then fails opaquely deep inside the state store (or, worse
-    * on old versions, silently misroutes keys). Call this before
-    * `.start()` on any query that reuses a checkpoint with a
-    * dataset-sized session; a fresh checkpoint passes vacuously. */
-  def assertCheckpointPartitions(ckpt: String, d: String): Unit = {
-    assertCheckpointPartitionsN(ckpt, statePartitionsFor(d))
-    assertCheckpointProviderN(ckpt, largeStateFor(d))
-  }
-
-  /** Latest offsets-log entry of a checkpoint: (batchId, file text).
-    * None for a fresh checkpoint (nothing pinned yet). The offset log's
-    * metadata line records the run's effective conf — including
-    * spark.sql.shuffle.partitions and the state-store providerClass —
-    * THE values stateful operators pinned their state layout/format to
-    * at the first checkpoint. */
-  private def latestOffsetEntry(ckpt: String): Option[(Long, String)] = {
-    val dir = java.nio.file.Paths.get(ckpt, "offsets")
-    if (!java.nio.file.Files.isDirectory(dir)) return None
-    val st = java.nio.file.Files.list(dir)
-    val latest =
-      try st.iterator().asScala.flatMap { p =>
-        val n = p.getFileName.toString
-        if (n.nonEmpty && n.forall(_.isDigit)) Some((n.toLong, p)) else None
-      }.toSeq.sortBy(_._1).lastOption
-      finally st.close()
-    latest.map { case (b, p) => (b, java.nio.file.Files.readString(p)) }
-  }
-
-  private[graft] def assertCheckpointPartitionsN(ckpt: String, computed: Int): Unit =
-    latestOffsetEntry(ckpt).foreach { case (batch, text) =>
-      val re = """"spark\.sql\.shuffle\.partitions"\s*:\s*"?(\d+)"?""".r
-      re.findFirstMatchIn(text)
-        .map(_.group(1).toInt).foreach { recorded =>
-          if (recorded != computed) throw new IllegalStateException(
-            s"checkpoint $ckpt (offsets batch $batch) pinned $recorded " +
-              s"shuffle/state partitions but the dataset now sizes to $computed " +
-              "— the events file grew or shrank in place under a reused " +
-              "checkpoint. Streaming state partitioning is FIXED at the first " +
-              "checkpoint; restarting with a different count fails opaquely in " +
-              "the state store. Either keep the original dataset size, start a " +
-              "fresh checkpoint (state rebuilds by replay), or migrate the " +
-              "state offline via the statestore reader.")
-        }
-    }
-
-  /** Sibling guard for the dataset-sized state store BACKEND (r15 ADVICE):
-    * `largeStateFor` flips the provider to RocksDB past 512 MB of events,
-    * but Spark pins the providerClass in OffsetSeqMetadata at the first
-    * checkpoint and keeps it on restart — so a dataset grown in place
-    * across the 512 MB boundary under a reused checkpoint keeps the
-    * ON-HEAP provider while the partition count (clamped at 32) may no
-    * longer change, leaving the partition guard silent and the OOM
-    * protection silently absent at exactly the scale where it matters.
-    * This guard makes that drift loud BEFORE start, with both classes
-    * and the remediations in the message. */
-  private[graft] def assertCheckpointProviderN(ckpt: String, rocks: Boolean): Unit =
-    latestOffsetEntry(ckpt).foreach { case (batch, text) =>
-      val computed =
-        if (rocks) "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-      val re = """"spark\.sql\.streaming\.stateStore\.providerClass"\s*:\s*"([^"]+)"""".r
-      re.findFirstMatchIn(text).map(_.group(1)).foreach { recorded =>
-        // state the mismatch FACTS first and the threshold crossing as the
-        // most likely cause, not the asserted one (r16 ADVICE: the same
-        // exception fires if the threshold constant was retuned or the
-        // checkpoint was created under a manually-set providerClass — a
-        // message that asserts one cause would misdirect the remediation)
-        if (recorded != computed) throw new IllegalStateException(
-          s"checkpoint $ckpt (offsets batch $batch) pinned state-store provider " +
-            s"$recorded but this run computes $computed. Spark keeps the " +
-            "checkpoint's pinned provider on restart, so the dataset-sized " +
-            "on-heap/RocksDB choice would silently NOT apply (an on-heap " +
-            "store at corpus scale is the r15 sf100 OOM). Most likely cause: " +
-            "the events file grew or shrank across the 512 MB RocksDB " +
-            "threshold under a reused checkpoint; also possible: the " +
-            "threshold constant changed between runs, or the checkpoint was " +
-            "created under a manually-set providerClass. Either keep the " +
-            "provider the checkpoint pinned (and the dataset size that " +
-            "implies), start a fresh checkpoint (state rebuilds by replay, " +
-            "with the computed provider), or migrate the state offline via " +
-            "the statestore reader.")
-      }
-    }
-
   /** Dataset-independent variant (the JVM prewarm): the toy floor. */
   private def streamSession(s: SparkSession): SparkSession =
     streamSessionN(s, 4, rocks = false)
@@ -233,147 +143,72 @@ object EventsStream {
     }
   }
 
-  private def eventsStream(batchSession: SparkSession, d: String,
-      splitAware: Boolean = true): DataFrame = {
+  private def eventsStream(batchSession: SparkSession, d: String): DataFrame = {
     val s = streamSession(batchSession, d)
-    val split =
-      if (splitAware) sys.env.get("SPARK_GRAFT_STREAM_SPLIT").map(_.toInt).getOrElse(1)
-      else 1
-    if (split > 1) {
-      // MULTI-TRIGGER arrival (builder probe, r15 verdict #4): the
-      // single-file staging below delivers the whole corpus in ONE
-      // micro-batch, so every watermark-bounded operator holds the whole
-      // corpus's state inside that one trigger — the attributed cause of
-      // the >10× sf100 stream steps. With SPARK_GRAFT_STREAM_SPLIT=N the
-      // events are staged once as N event-time-range chunk files with
-      // strictly increasing mtimes and the source takes ONE file per
-      // trigger — a time-ordered arrival, the production shape — so the
-      // watermark advances between triggers and expiry actually bounds
-      // state. Results are UNCHANGED: chunks are contiguous ts ranges
-      // (batch i+1's min ts >= batch i's max), so nothing arrives behind
-      // the watermark, and the gates' Complete-mode aggregates never drop
-      // rows. Probe-only: gates run split=1 unless the env var is set.
-      val stageDir = java.nio.file.Paths.get(
-        s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}_split$split")
-      stageSplitInto(s, d, stageDir, split)
-      // schema of the REWRITTEN chunks (normalized micros, not the raw
-      // vintage); normalizeTs is then an identity, shared all the same
-      val schema = s.read.parquet(stageDir.toString).schema
-      Tables.normalizeTs(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stageDir.toString))
-    } else {
-      val stageDir = java.nio.file.Paths.get(
-        s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}")
-      stageInto(s"$d/events.parquet", stageDir, "events.parquet")
-      // schema of the RAW file (whatever vintage the driver wrote; see
-      // Tables.eventsRaw), then the SAME ts normalization the batch reader
-      // applies — shared code so the two paths cannot drift
-      val schema = Tables.eventsRaw(s, d).schema
-      Tables.normalizeTs(s.readStream.schema(schema).parquet(stageDir.toString))
-    }
+    val stageDir = java.nio.file.Paths.get(
+      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}")
+    stageInto(s"$d/events.parquet", stageDir, "events.parquet")
+    // schema of the RAW file (whatever vintage the driver wrote; see
+    // Tables.eventsRaw), then the SAME ts normalization the batch reader
+    // applies — shared code so the two paths cannot drift
+    val schema = Tables.eventsRaw(s, d).schema
+    Tables.normalizeTs(s.readStream.schema(schema).parquet(stageDir.toString))
   }
 
-  /** Stage the events table as `n` event-time-range chunk files for the
-    * multi-trigger probe: repartitionByRange on ts (chunk i = i-th ts
-    * range), then the part files move into the stage dir in partition
-    * order with strictly increasing mtimes, so the file source's
-    * (mtime, path) ordering delivers them oldest-range-first. Stamped on
-    * (source size, source mtime, n) — rebuilt only when the source or the
-    * chunk count changes. */
-  private def stageSplitInto(s: SparkSession, d: String,
-      stageDir: java.nio.file.Path, n: Int): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(s"$d/events.parquet")
-    val marker = stageDir.resolve("_SPLIT_STAMP")
-    val stamp = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}:$n"
-    if (Files.exists(marker) && Files.readString(marker) == stamp) return
-    val tmp = Files.createTempDirectory("graft_split_build")
-    Tables.events(s, d)
-      .repartitionByRange(n, col("ts"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val (count, _) = installChunks(tmp, stageDir)
-    Files.writeString(marker, stamp)
-    System.err.println(s"[stream-split] staged $count ts-range chunks -> $stageDir")
-  }
-
-  /** Wipe `stageDir` and move `tmp`'s part files in as chunkNNN.parquet
-    * with strictly increasing mtimes (partition order == ts-range order,
-    * so the file source's (mtime, path) ordering delivers them
-    * oldest-range-first). Returns (chunk count, base mtime millis) so a
-    * caller can append further files AFTER the chunks in mtime order. */
-  private def installChunks(tmp: java.nio.file.Path,
-      stageDir: java.nio.file.Path): (Int, Long) = {
-    import java.nio.file.{Files, StandardCopyOption}
-    if (Files.isDirectory(stageDir)) {
-      val old = Files.list(stageDir)
-      try old.iterator().asScala.foreach(Files.delete) finally old.close()
-    }
-    Files.createDirectories(stageDir)
-    val partsStream = Files.list(tmp)
-    val parts =
-      try partsStream.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq
-        .sortBy(_.getFileName.toString)
-      finally partsStream.close()
-    val base = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val dst = stageDir.resolve(f"chunk$i%03d.parquet")
-      Files.move(p, dst, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
-    }
-    (parts.size, base)
-  }
-
-  /** Stage events as ts-range chunks PLUS two terminal watermark
-    * SENTINEL files — the Append-mode flush shape (r16 verdict #5). A
-    * production Append-mode session sink always holds back the sessions
-    * the final watermark never passes; the standard fix is terminal
-    * punctuation: after end of input, inject heartbeat events far past
-    * max(ts) so the watermark advances over every real session's end and
-    * the tail emits. Two sentinels because the watermark computed from
-    * trigger N takes effect in trigger N+1: sentinel 1's trigger runs
-    * with the last REAL watermark, sentinel 2's trigger runs with
-    * watermark ≈ sentinel1 − delay > every real session end and flushes
-    * the tail. The sentinels use user_id −1 and ts > max + a year; their
-    * own session is never closed by a later watermark, so they CANNOT
-    * appear in the output (the gate filters user_id ≥ 0 anyway, as the
-    * explicit contract). Chunk count follows SPARK_GRAFT_STREAM_SPLIT,
-    * so the gate is arrival-shape-checkable like every other stream. */
+  /** Stage events as ONE file PLUS two terminal watermark SENTINEL
+    * files — the Append-mode flush shape (r16 verdict #5). A production
+    * Append-mode session sink always holds back the sessions the final
+    * watermark never passes; the standard fix is terminal punctuation:
+    * after end of input, inject heartbeat events far past max(ts) so the
+    * watermark advances over every real session's end and the tail emits.
+    * Two sentinels because the watermark computed from trigger N takes
+    * effect in trigger N+1: sentinel 1's trigger runs with the last REAL
+    * watermark, sentinel 2's trigger runs with watermark ≈ sentinel1 −
+    * delay > every real session end and flushes the tail. The sentinels
+    * use user_id −1 and ts > max + a year; their own session is never
+    * closed by a later watermark, so they CANNOT appear in the output
+    * (the gate filters user_id ≥ 0 anyway, as the explicit contract).
+    * The three files get strictly increasing mtimes, so the file source's
+    * (mtime, path) order with one file per trigger delivers the events
+    * first, then each sentinel in its own trigger. */
   private def stageTerminalInto(s: SparkSession, d: String,
-      stageDir: java.nio.file.Path, n: Int): Unit = {
+      stageDir: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val src = Paths.get(s"$d/events.parquet")
     val marker = stageDir.resolve("_TERM_STAMP")
-    val stamp = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}:$n:term-v1"
+    val stamp = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}:term-v2"
     if (Files.exists(marker) && Files.readString(marker) == stamp) return
+    graft.util.AtomicTable.deleteRecursively(stageDir)
+    Files.createDirectories(stageDir)
+    val base = System.currentTimeMillis()
+    // write `df` as one file named `name` into the stage dir, `i` s after base
+    def place(df: DataFrame, name: String, i: Int): Unit = {
+      val tmp = Files.createTempDirectory("graft_term_build")
+      try {
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val ps = Files.list(tmp)
+        val part =
+          try ps.iterator().asScala
+            .find(_.getFileName.toString.startsWith("part-")).get
+          finally ps.close()
+        val dst = stageDir.resolve(name)
+        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
+        Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
+      } finally graft.util.AtomicTable.deleteRecursively(tmp)
+    }
     val ev = Tables.events(s, d)
     // 1-row scalar aggregate (kilobyte-scale driver value)
     val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
-    val tmp = Files.createTempDirectory("graft_term_build")
-    ev.repartitionByRange(n, col("ts")).write.mode("overwrite").parquet(tmp.toString)
-    val (count, base) = installChunks(tmp, stageDir)
+    place(ev, "events.parquet", 0)
     Seq(370L, 740L).zipWithIndex.foreach { case (days, j) =>
       val st = new Timestamp(maxTs.getTime + days * 86400000L)
-      val one = s.range(1).select(
+      place(s.range(1).select(
         lit(-(j + 1).toLong).as("event_id"), lit(st).as("ts"),
         lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-      val t2 = Files.createTempDirectory("graft_term_sentinel")
-      one.coalesce(1).write.mode("overwrite").parquet(t2.toString)
-      val ps = Files.list(t2)
-      val part =
-        try ps.iterator().asScala
-          .find(_.getFileName.toString.startsWith("part-")).get
-        finally ps.close()
-      val dst = stageDir.resolve(s"sentinel$j.parquet")
-      Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(base + (count + 1 + j) * 1000L))
+        lit(0.0).as("value"), lit("{}").as("props")), s"sentinel$j.parquet", j + 1)
     }
     Files.writeString(marker, stamp)
-    System.err.println(
-      s"[stream-term] staged $count ts-range chunks + 2 sentinels -> $stageDir")
   }
 
   // memory-sink names must be unique PER INVOCATION: the streaming clone
@@ -408,18 +243,6 @@ object EventsStream {
         (batch, id) => batch.write.mode("overwrite").parquet(s"$dir/b$id")
     val q = df.writeStream.outputMode(mode).foreachBatch(fn).start()
     try q.processAllAvailable() finally q.stop()
-    // opt-in perf attribution (builder tooling): per-micro-batch engine
-    // timing + state-store metrics, the data behind the NOTES.md
-    // streaming floors — durationMs names the phase (addBatch vs
-    // planning vs WAL), stateOperators names the store costs
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE"))
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[stream-profile] $name batch=${p.batchId} " +
-          s"rows=${p.numInputRows} durationMs=${p.durationMs} " +
-          p.stateOperators.map(o => s"state(total=${o.numRowsTotal} " +
-            s"updated=${o.numRowsUpdated} removed=${o.numRowsRemoved} " +
-            s"commitMs=${o.commitTimeMs} custom=${o.customMetrics})").mkString(" "))
-      }
     // explicit schema: a query whose watermark held every row back leaves
     // no part file, and the scan must still return an EMPTY frame of the
     // right shape (as the memory sink did), not fail schema inference.
@@ -820,16 +643,12 @@ FROM events GROUP BY event_type ORDER BY event_type"""
     * EVICTS and EMITS closed sessions between triggers, state bounded
     * at ~one arrival window of open sessions, the r16 sf100
     * demonstration — now emits the COMPLETE session set and
-    * hash-matches the batch gap-and-islands oracle. Honors
-    * `SPARK_GRAFT_STREAM_SPLIT` for multi-trigger real arrival ahead of
-    * the sentinels (run with SPARK_GRAFT_STREAM_PROFILE=1 to see
-    * per-trigger state total/removed). */
+    * hash-matches the batch gap-and-islands oracle. */
   def sessionWindowAppend(s: SparkSession, d: String): DataFrame = {
     val ss = streamSession(s, d)
-    val split = sys.env.get("SPARK_GRAFT_STREAM_SPLIT").map(_.toInt).getOrElse(1)
     val stageDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}_term$split")
-    stageTerminalInto(ss, d, stageDir, split)
+      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}_term")
+    stageTerminalInto(ss, d, stageDir)
     val schema = ss.read.parquet(stageDir.toString).schema
     val src = Tables.normalizeTs(ss.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(stageDir.toString))
@@ -871,17 +690,14 @@ FROM events GROUP BY event_type ORDER BY event_type"""
     * the open session across batches in a genuine multi-batch deployment. */
   def sessionize(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // splitAware = false: this gate's contract IS the single-batch replay
-    // (the end-of-input flush below closes trailing sessions exactly as
-    // the batch oracle closes them at corpus end). Under multi-trigger
-    // arrival an Append-mode flush-at-batch-end would SPLIT every session
-    // spanning a chunk boundary (the r16 SPLIT=20 differential measured
-    // it: 9554 vs 9549 sessions) — and the arrival-invariant form needs
-    // event-time timers plus watermark-advancing traffic, which is
-    // exactly what the production twin `stream_timer_sessions` gates.
-    // So the replay gate pins whole-corpus arrival; the probe knob
-    // drives the twin instead.
-    val ds: Dataset[Ev] = eventsStream(s, d, splitAware = false).as[Ev]
+    // this gate's contract IS the single-batch replay (the end-of-input
+    // flush below closes trailing sessions exactly as the batch oracle
+    // closes them at corpus end). Under multi-trigger arrival an
+    // Append-mode flush-at-batch-end would SPLIT every session spanning a
+    // trigger boundary — the arrival-invariant form needs event-time
+    // timers plus watermark-advancing traffic, which is exactly what the
+    // production twin `stream_timer_sessions` gates.
+    val ds: Dataset[Ev] = eventsStream(s, d).as[Ev]
 
     def fn(user: Long, events: Iterator[Ev], state: GroupState[UserState]): Iterator[Session] = {
       // Timestamps carry microseconds — compare/sort at full precision

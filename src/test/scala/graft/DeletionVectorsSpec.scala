@@ -6,10 +6,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.DeletionVectors
+import graft.ops.MergeOnRead
 import graft.util.AtomicTable
 
-/** Merge-on-read deletes (ops/DeletionVectors.scala): the oracle gate
+/** Merge-on-read deletes ([[MergeOnRead.deleteWhere]]): the oracle gate
   * proves the DV-applied ANSWER; this spec proves the merge-on-read
   * mechanics — no file rewrites on delete, idempotent composition, and
   * compaction paying the debt back. */
@@ -41,9 +41,9 @@ class DeletionVectorsSpec extends AnyFunSuite {
     val total = AtomicTable.read(spark, base).count()
     val doomed = AtomicTable.read(spark, base)
       .where(col("o_orderstatus") === "F").count()
-    DeletionVectors.deleteWhere(spark, base, col("o_orderstatus") === "F")
+    MergeOnRead.deleteWhere(spark, base, col("o_orderstatus") === "F")
     assert(dataFiles(base) == before, "data files must be untouched by a DV delete")
-    val after = DeletionVectors.readWithDv(spark, base)
+    val after = MergeOnRead.readMerged(spark, base)
     assert(after.count() == total - doomed)
     assert(after.where(col("o_orderstatus") === "F").count() == 0L)
   }
@@ -55,29 +55,29 @@ class DeletionVectorsSpec extends AnyFunSuite {
     val nF = t.where(col("o_orderstatus") === "F").count()
     val nUrgent = t.where(col("o_orderstatus") =!= "F" &&
       col("o_orderpriority") === "1-URGENT").count()
-    DeletionVectors.deleteWhere(spark, base, col("o_orderstatus") === "F")
-    DeletionVectors.deleteWhere(spark, base, col("o_orderstatus") === "F") // again
-    assert(DeletionVectors.readWithDv(spark, base).count() == n - nF,
+    MergeOnRead.deleteWhere(spark, base, col("o_orderstatus") === "F")
+    MergeOnRead.deleteWhere(spark, base, col("o_orderstatus") === "F") // again
+    assert(MergeOnRead.readMerged(spark, base).count() == n - nF,
       "duplicate DV entries must not double-delete")
-    DeletionVectors.deleteWhere(spark, base, col("o_orderpriority") === "1-URGENT")
-    assert(DeletionVectors.readWithDv(spark, base).count() == n - nF - nUrgent,
+    MergeOnRead.deleteWhere(spark, base, col("o_orderpriority") === "1-URGENT")
+    assert(MergeOnRead.readMerged(spark, base).count() == n - nF - nUrgent,
       "a second delete must compose with the first")
   }
 
   test("compaction materializes survivors into a DV-free new version") {
     val base = stage("compact")
-    DeletionVectors.deleteWhere(spark, base, col("o_orderkey") % 7 === 0)
-    val want = DeletionVectors.readWithDv(spark, base)
+    MergeOnRead.deleteWhere(spark, base, col("o_orderkey") % 7 === 0)
+    val want = MergeOnRead.readMerged(spark, base)
       .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val verBefore = AtomicTable.resolve(base).get
-    DeletionVectors.compactDeletes(spark, base, nFiles = 4)
+    MergeOnRead.compactMerged(spark, base, nFiles = 4)
     val verAfter = AtomicTable.resolve(base).get
     assert(verAfter != verBefore, "compaction must publish a NEW version")
     assert(!Files.isDirectory(Paths.get(s"$verAfter/_dv")),
       "the compacted version starts with no deletion vector")
     // survivors-only, both through the DV reader and a plain reader
-    val got = DeletionVectors.readWithDv(spark, base)
+    val got = MergeOnRead.readMerged(spark, base)
       .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == want, "compaction changed the table's contents")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.RleBitmap
-import graft.ops.DeletionVectors
+import graft.ops.MergeOnRead
 import graft.util.AtomicTable
 
 /** The DV bitmap threshold (r10 verdict #4): a file whose deleted-position
@@ -61,17 +61,17 @@ class DvBitmapSpec extends AnyFunSuite {
   }
 
   test("dense delete crosses the threshold: bitmap filter, NO anti-join") {
-    val prior = DeletionVectors.BitmapThresholdPositions
-    DeletionVectors.BitmapThresholdPositions = 100L
+    val prior = MergeOnRead.BitmapThresholdPositions
+    MergeOnRead.BitmapThresholdPositions = 100L
     try {
       val base = stage(10000)
       // every file collects ~833 positions > 100 → all files go bitmap
-      DeletionVectors.deleteWhere(spark, base, col("id") % 3 === 0)
-      assert(DeletionVectors.hasBm(base), "bitmap sidecar not written")
-      val df = DeletionVectors.readWithDv(spark, base)
+      MergeOnRead.deleteWhere(spark, base, col("id") % 3 === 0)
+      assert(MergeOnRead.hasBm(base), "bitmap sidecar not written")
+      val df = MergeOnRead.readMerged(spark, base)
       assert(df.count() == (0 until 10000).count(_ % 3 != 0))
       assert(df.where(col("id") % 3 === 0).count() == 0)
-      val nodes = PlanNodes.executedNodes(DeletionVectors.readWithDv(spark, base))
+      val nodes = PlanNodes.executedNodes(MergeOnRead.readMerged(spark, base))
       val antis = nodes.collect {
         case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
       }
@@ -80,41 +80,68 @@ class DvBitmapSpec extends AnyFunSuite {
       assert(nodes.exists(_.toString.contains("rle_contains")),
         "rle_contains filter not in the executed plan")
       // composition: a second delete re-encodes and both apply
-      DeletionVectors.deleteWhere(spark, base, col("id") % 7 === 1)
-      val after = DeletionVectors.readWithDv(spark, base)
+      MergeOnRead.deleteWhere(spark, base, col("id") % 7 === 1)
+      val after = MergeOnRead.readMerged(spark, base)
       assert(after.count() ==
         (0 until 10000).count(i => i % 3 != 0 && i % 7 != 1))
-    } finally DeletionVectors.BitmapThresholdPositions = prior
+    } finally MergeOnRead.BitmapThresholdPositions = prior
+  }
+
+  test("a merge into bitmap-deleted files: one read hides both, still through rle_contains") {
+    import spark.implicits._
+    val prior = MergeOnRead.BitmapThresholdPositions
+    MergeOnRead.BitmapThresholdPositions = 100L
+    try {
+      val base = stage(10000)
+      MergeOnRead.deleteWhere(spark, base, col("id") % 3 === 0)
+      assert(MergeOnRead.hasBm(base))
+      // ids ≡ 1 mod 10 re-arrive with a new payload: live ones are
+      // replaced in place (their positions join the bitmapped files'
+      // deletes), bitmap-deleted ones (21, 51, ...) re-enter as inserts
+      val batch = (0 until 10000).filter(_ % 10 == 1)
+        .map(i => (i.toLong, s"m$i")).toDF("id", "payload")
+      MergeOnRead.mergeUpsert(spark, base, batch, "id")
+      val want = (0 until 10000).collect {
+        case i if i % 10 == 1 => (i.toLong, s"m$i")
+        case i if i % 3 != 0  => (i.toLong, s"v$i")
+      }.toSet
+      val got = MergeOnRead.readMerged(spark, base).as[(Long, String)].collect()
+      assert(got.length == want.size && got.toSet == want,
+        "the merged read must hide bitmap-deleted and merge-replaced rows")
+      assert(PlanNodes.executedNodes(MergeOnRead.readMerged(spark, base))
+        .exists(_.toString.contains("rle_contains")),
+        "the merged read lost its bitmap filter")
+    } finally MergeOnRead.BitmapThresholdPositions = prior
   }
 
   test("sparse delete stays on the list anti-join; mixed tables use both") {
-    val prior = DeletionVectors.BitmapThresholdPositions
-    DeletionVectors.BitmapThresholdPositions = 100L
+    val prior = MergeOnRead.BitmapThresholdPositions
+    MergeOnRead.BitmapThresholdPositions = 100L
     try {
       val base = stage(10000)
-      DeletionVectors.deleteWhere(spark, base, col("id").isin(3L, 999L, 5000L))
-      assert(!DeletionVectors.hasBm(base), "sparse delete must not write bitmaps")
-      val df = DeletionVectors.readWithDv(spark, base)
+      MergeOnRead.deleteWhere(spark, base, col("id").isin(3L, 999L, 5000L))
+      assert(!MergeOnRead.hasBm(base), "sparse delete must not write bitmaps")
+      val df = MergeOnRead.readMerged(spark, base)
       assert(df.count() == 9997 && df.where(col("id") === 999L).count() == 0)
-      val antis = PlanNodes.executedNodes(DeletionVectors.readWithDv(spark, base))
+      val antis = PlanNodes.executedNodes(MergeOnRead.readMerged(spark, base))
         .collect { case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j }
       assert(antis.nonEmpty, "sparse path lost its anti-join")
       // push the LEADING id range over the threshold: the range-clustered
       // layout concentrates ids < 2000 in the first file(s), which cross
       // the threshold and go bitmap, while the id=5000 single keeps its
       // file on the list form — BOTH application forms in one plan
-      DeletionVectors.deleteWhere(spark, base, col("id") < 2000 && col("id") % 2 === 0)
-      assert(DeletionVectors.hasBm(base))
-      val mixed = DeletionVectors.readWithDv(spark, base)
+      MergeOnRead.deleteWhere(spark, base, col("id") < 2000 && col("id") % 2 === 0)
+      assert(MergeOnRead.hasBm(base))
+      val mixed = MergeOnRead.readMerged(spark, base)
       assert(mixed.count() ==
         (0 until 10000).count(i => !Set(3, 999, 5000).contains(i) &&
           !(i < 2000 && i % 2 == 0)))
-      val nodes = PlanNodes.executedNodes(DeletionVectors.readWithDv(spark, base))
+      val nodes = PlanNodes.executedNodes(MergeOnRead.readMerged(spark, base))
       assert(nodes.exists(_.toString.contains("rle_contains")),
         "mixed table lost its bitmap filter")
       assert(nodes.collect {
         case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
       }.nonEmpty, "mixed table lost its list anti-join")
-    } finally DeletionVectors.BitmapThresholdPositions = prior
+    } finally MergeOnRead.BitmapThresholdPositions = prior
   }
 }

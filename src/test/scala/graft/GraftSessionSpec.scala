@@ -10,4 +10,11 @@ class GraftSessionSpec extends AnyFunSuite {
       Runtime.getRuntime.availableProcessors)
     assert(GraftSession.shufflePartitionsFor("spark://host:7077") == 200)
   }
+
+  test("reading events leaves the caller's session conf unchanged") {
+    val s = TestSpark.spark.newSession()
+    val before = s.conf.getAll
+    Tables.events(s, TestSpark.sf).schema
+    assert(s.conf.getAll == before)
+  }
 }

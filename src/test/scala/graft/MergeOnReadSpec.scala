@@ -83,6 +83,25 @@ class MergeOnReadSpec extends AnyFunSuite {
       "every merge-inserted row must carry the second merge's update")
   }
 
+  test("a DELETE after a MERGE reaches the merge-written row versions") {
+    val base = stage("delete_after_merge")
+    val o = Tables.orders(spark, sf)
+    MergeOnRead.mergeUpsert(spark, base, batch(), "o_orderkey")
+    // an updated key lives on only as its _mor row version
+    val k = o.where(col("o_orderkey") % 5 === 0).agg(min("o_orderkey")).head().get(0)
+    MergeOnRead.deleteWhere(spark, base, col("o_orderkey") === k)
+    assert(MergeOnRead.readMerged(spark, base).where(col("o_orderkey") === k).count() == 0L,
+      "a deleted key must not survive as the merge's row version")
+    // a predicate only _mor rows match: every updated row carries status M
+    MergeOnRead.deleteWhere(spark, base, col("o_orderstatus") === "M")
+    val want = o.where(col("o_orderkey") % 5 =!= 0)
+      .unionByName(batch().where(col("o_orderstatus") =!= "M"))
+    val got = MergeOnRead.readMerged(spark, base)
+    assert(got.count() == want.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      "the delete must remove exactly the merge-updated rows")
+  }
+
   test("compaction publishes a sidecar-free version with identical contents") {
     val base = stage("compact")
     MergeOnRead.mergeUpsert(spark, base, batch(), "o_orderkey")

@@ -57,65 +57,6 @@ class StreamRestartSpec extends AnyFunSuite {
     assert(after2 == Map(1 -> ((3L, 16.0)), 2 -> ((1L, 7.0)), 3 -> ((1L, 2.0))))
   }
 
-  test("checkpoint-vs-resize guard: a pinned partition count refuses a drifted dataset size loudly") {
-    import spark.implicits._
-    // build a real checkpoint: the offset log's metadata line records the
-    // run's spark.sql.shuffle.partitions — the value stateful operators
-    // pinned their state layout to
-    val watch = Files.createTempDirectory("graft_guard_src").toString
-    val ckpt = Files.createTempDirectory("graft_guard_ckpt").toString
-    Seq((1, 1.0)).toDF("user_id", "value")
-      .coalesce(1).write.mode("append").parquet(watch)
-    val q = spark.readStream.schema("user_id INT, value DOUBLE").parquet(watch)
-      .groupBy("user_id").agg(count(lit(1)).as("n"))
-      .writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName("graft_guard_sink")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.catalog.dropTempView("graft_guard_sink")
-    val recorded = spark.conf.get("spark.sql.shuffle.partitions").toInt
-
-    // same computed count: the guard passes (the immutable-fixture case)
-    streaming.EventsStream.assertCheckpointPartitionsN(ckpt, recorded)
-    // a fresh checkpoint dir has nothing pinned: vacuously passes
-    streaming.EventsStream.assertCheckpointPartitionsN(
-      Files.createTempDirectory("graft_guard_fresh").toString, recorded + 5)
-    // drifted dataset (grown-in-place events file => different computed
-    // count): the guard must refuse BEFORE start, with the pinned and
-    // computed counts and the remediation in the message — not let Spark
-    // fail opaquely inside the state store
-    val e = intercept[IllegalStateException] {
-      streaming.EventsStream.assertCheckpointPartitionsN(ckpt, recorded + 5)
-    }
-    assert(e.getMessage.contains(s"pinned $recorded") &&
-      e.getMessage.contains(s"sizes to ${recorded + 5}") &&
-      e.getMessage.contains("fresh checkpoint"),
-      s"imprecise guard message: ${e.getMessage}")
-
-    // sibling guard (r15 ADVICE): the checkpoint above pinned this
-    // session's provider — the on-heap HDFS default. A dataset grown
-    // across the 512 MB RocksDB boundary computes rocks=true while the
-    // partition count (clamped) may not change: the provider guard must
-    // refuse loudly where the partition guard stays silent.
-    streaming.EventsStream.assertCheckpointProviderN(ckpt, rocks = false)
-    streaming.EventsStream.assertCheckpointProviderN(
-      Files.createTempDirectory("graft_guard_fresh2").toString, rocks = true)
-    val ep = intercept[IllegalStateException] {
-      streaming.EventsStream.assertCheckpointProviderN(ckpt, rocks = true)
-    }
-    assert(ep.getMessage.contains("HDFSBackedStateStoreProvider") &&
-      ep.getMessage.contains("RocksDBStateStoreProvider") &&
-      ep.getMessage.contains("512 MB") &&
-      ep.getMessage.contains("Most likely cause"),
-      s"imprecise provider-guard message: ${ep.getMessage}")
-    // r16 ADVICE: the message must state the mismatch facts first and
-    // rank causes, not assert the threshold crossing — the same guard
-    // fires on a retuned threshold or a manually-set providerClass
-    assert(ep.getMessage.contains("manually-set providerClass"),
-      "message no longer names the alternative causes")
-  }
-
   test("a restarted ANN serving session rebuilds the PQ index and serves identical top-k") {
     // r8 verdict #5: stream_ann_serve probes the session-memoized PQ
     // codes index. A serving node that restarts (new session — its memos
